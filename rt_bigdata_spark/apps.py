@@ -140,7 +140,7 @@ def unique_visit_app(page: DataFrame, streaming: bool = True, ttl: bool = False)
 
 def user_jump_detail_app(page: DataFrame) -> DataFrame:
     """UserJumpDetailApp: bounce detection (T3 CEP-timeout). Streaming
-    input must carry a watermarked ``eventTime`` column."""
+    input must carry a watermarked event-time column (any name)."""
     from rt_bigdata_spark.streaming.stateful import detect_bounces
 
     return detect_bounces(page)

@@ -2,13 +2,19 @@
 
 Mirrors the reference's per-app environment setup (parallelism, state
 backend, checkpointing — e.g. rt-flink OdsBaseLogApp.scala:38-57) as a
-single session factory. Scale-oriented defaults:
+single session factory. Defaults:
 
+- One width for the whole session, derived from the machine: ``cpus``
+  (``SPARK_GRAFT_CPUS`` if set, else the cores this process may run on)
+  is both the ``local[cpus]`` thread count and
+  ``spark.sql.shuffle.partitions``. Every stateful or window partition
+  pays one state-store commit, one Arrow round trip to Python and one
+  sink file per micro-batch, so one partition per core is the cheapest
+  width that still keeps every core busy. Cluster deploys set
+  ``spark.sql.shuffle.partitions`` through ``extra_conf``; a streaming
+  query restarted from a checkpoint keeps the width recorded there.
 - AQE on (runtime coalescing / skew-join handling replaces the
   reference's hand-tuned ``setParallelism(4)``),
-- shuffle partitions sized for the local test harness but meant to be
-  overridden (cluster deploys should set ``spark.sql.shuffle.partitions``
-  ≈ 2-3× total cores; AQE coalesces down),
 - Arrow enabled for the Pandas-UDF paths (the only Python hot paths we
   allow are Arrow-batched),
 - UTC session timezone so window boundaries and date formatting are
@@ -28,28 +34,21 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Local test default; cluster deploys override (AQE coalesces down).
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
+    # spark.sql.shuffle.partitions follows the machine: one per core, set
+    # in _session. Cluster deploys override it through extra_conf.
     # Let AQE re-optimize CACHED plans too (off by default for output-
     # partitioning stability): the engine's documented caller-owned
     # persists (minhash signatures, sweep pair sets, shingle tables)
     # otherwise materialize at the raw shuffle-partition count and
     # every downstream stage over the cache schedules that many tasks
-    # regardless of size — r15 measured 32-task stages over sub-MB
-    # cached frames across the dedup family (guide §2.2: fewer, larger
-    # partitions). Purely a physical-layout change; results and the
-    # cached-plan keying are unaffected. Env-parameterised (r16) so the
-    # cold-JVM effect can be A/B'd in paired subprocess runs — the r15
-    # driver artifact showed the three cached-plan consumers
-    # (dedup_threshold_sweep/minhash_lsh/dup_source_matrix) regressing
-    # beyond the drift band COLD while warm UI metrics improved.
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": os.environ.get(
-        "SPARK_GRAFT_CACHED_PLAN_AQE", "true"
-    ),
+    # regardless of size (guide §2.2: fewer, larger partitions). Purely
+    # a physical-layout change; results and the cached-plan keying are
+    # unaffected.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Split small-but-compute-heavy files (documents/embeddings at test
     # SF are single ~10 MB files → one task → one core without this).
     # At 100 TB the scan parallelism comes from file count anyway.
-    "spark.sql.files.maxPartitionBytes": os.environ.get("SPARK_GRAFT_MAX_PART_BYTES", str(8 * 1024 * 1024)),
+    "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
     # Arrow for pandas_udf / applyInPandas / mapInPandas exchange.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Deterministic window boundaries + date_format across engines.
@@ -91,16 +90,24 @@ def use_rocksdb_state(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_STATE_STORE)
 
 
+def _session(app_name: str, conf: dict[str, str], extra_conf: dict[str, str] | None, hive: bool = False) -> SparkSession:
+    """Build (or return) the session on ``local[cpus]`` — ``cpus`` is
+    ``SPARK_GRAFT_CPUS`` if set, else the cores this process may run on —
+    with one shuffle and state partition per core, then the defaults,
+    ``conf`` and the caller's ``extra_conf`` (which may override the width)."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
+    merged = {**_DEFAULTS, "spark.sql.shuffle.partitions": str(cpus), **conf, **(extra_conf or {})}
+    for k, v in merged.items():
+        builder = builder.config(k, v)
+    if hive:
+        builder = builder.enableHiveSupport()
+    return builder.getOrCreate()
+
+
 def get_spark(app_name: str = "rt_bigdata_spark", extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Return the shared SparkSession, creating it if needed."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    conf = dict(_DEFAULTS)
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return _session(app_name, {}, extra_conf)
 
 
 def get_hive_spark(
@@ -123,20 +130,11 @@ def get_hive_spark(
     process, not after ``get_spark`` has already built an in-memory-
     catalog session.
     """
-    conf = dict(_DEFAULTS)
-    conf.update(
-        {
-            "spark.sql.warehouse.dir": os.path.join(warehouse_dir, "warehouse"),
-            "spark.driver.extraJavaOptions": f"-Dderby.system.home={os.path.join(warehouse_dir, 'derby')}",
-        }
-    )
-    if extra_conf:
-        conf.update(extra_conf)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    return builder.enableHiveSupport().getOrCreate()
+    hive_conf = {
+        "spark.sql.warehouse.dir": os.path.join(warehouse_dir, "warehouse"),
+        "spark.driver.extraJavaOptions": f"-Dderby.system.home={os.path.join(warehouse_dir, 'derby')}",
+    }
+    return _session(app_name, hive_conf, extra_conf, hive=True)
 
 
 def stop_spark() -> None:

@@ -17,12 +17,31 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
+
+
+def _orderable(dt: DataType) -> bool:
+    """Whether Spark can sort on a column of type ``dt`` (maps cannot)."""
+    if isinstance(dt, MapType):
+        return False
+    if isinstance(dt, ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return True
 
 
 def dedup_last_wins(df: DataFrame, keys: Sequence[str], version_col: str = "ts") -> DataFrame:
     """ReplacingMergeTree(ts) emulation: keep the max-version row per
-    key (deterministic tie-break keeps plans reproducible)."""
-    w = Window.partitionBy(*keys).orderBy(F.col(version_col).desc())
+    key. A tie on the version goes to the row with the largest remaining
+    columns, compared in column order, so the winner does not depend on
+    input order or partitioning (map columns cannot be sorted and take
+    no part)."""
+    rest = [
+        f.name for f in df.schema.fields
+        if f.name not in (*keys, version_col) and _orderable(f.dataType)
+    ]
+    w = Window.partitionBy(*keys).orderBy(*(F.col(c).desc() for c in (version_col, *rest)))
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 

@@ -87,19 +87,22 @@ def _day(ts_ms: int) -> str:
 
 def _prune_for_state(events: DataFrame, cols: "tuple[str, ...]") -> DataFrame:
     """Project to exactly the columns the stateful kernel reads — plus
-    the watermarked ``eventTime`` column when present, since dropping
-    it would detach the query's watermark/timeout machinery — BEFORE
-    the keyed shuffle and the Arrow boundary (r16, guide §4.1/§2.3):
-    applyInPandasWithState / transformWithStateInPandas ship EVERY
-    column of the grouped frame to the Python worker, and Spark cannot
-    see which fields the function touches, so a wide production log
-    schema would otherwise cross the state-store shuffle and the
+    any watermarked event-time column (the one ``withWatermark`` tagged
+    with ``spark.watermarkDelayMs`` metadata, whatever its name), since
+    dropping it would detach the query's watermark/timeout machinery —
+    BEFORE the keyed shuffle and the Arrow boundary (r16, guide
+    §4.1/§2.3): applyInPandasWithState / transformWithStateInPandas ship
+    EVERY column of the grouped frame to the Python worker, and Spark
+    cannot see which fields the function touches, so a wide production
+    log schema would otherwise cross the state-store shuffle and the
     JVM→Arrow→Python boundary in full on every micro-batch. Semantics
     unchanged: the kernels read only these fields, and the output
     schema is fixed by outputStructType either way."""
     keep = list(cols)
-    if "eventTime" in events.columns and "eventTime" not in keep:
-        keep.append("eventTime")
+    keep += [
+        f.name for f in events.schema.fields
+        if "spark.watermarkDelayMs" in f.metadata and f.name not in keep
+    ]
     return events.select(*keep)
 
 
@@ -210,8 +213,9 @@ def _uv_fn_ttl(key: tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState)
 def unique_visits(events: DataFrame, ttl: bool = False) -> DataFrame:
     """T2 daily-UV dedup. ``ttl=True`` reproduces the reference's 1-day
     state TTL via event-time timeouts — the input must then carry a
-    watermarked event-time column (e.g. ``withWatermark("eventTime",
-    …)``) in addition to the epoch-ms ``ts``."""
+    watermarked event-time column of any name (e.g.
+    ``withWatermark("eventTime", …)``) in addition to the epoch-ms
+    ``ts``."""
     events = _prune_for_state(events, ("mid", "ts", "last_page_id"))
     if ttl:
         return events.groupBy("mid").applyInPandasWithState(
@@ -293,9 +297,9 @@ def _bounce_fn(key: tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState)
 
 
 def detect_bounces(events: DataFrame) -> DataFrame:
-    """Streaming bounce detection. ``events`` must carry an
-    ``eventTime`` timestamp column with a watermark for the timeout to
-    fire (e.g. ``withWatermark("eventTime", "2 seconds")``)."""
+    """Streaming bounce detection. ``events`` must carry a timestamp
+    column with a watermark, of any name, for the timeout to fire (e.g.
+    ``withWatermark("eventTime", "2 seconds")``)."""
     events = _prune_for_state(events, ("mid", "page_id", "last_page_id", "ts"))
     return events.groupBy("mid").applyInPandasWithState(
         _bounce_fn,

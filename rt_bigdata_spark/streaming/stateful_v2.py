@@ -305,7 +305,7 @@ def track_funnel_v2(
     """T3-generalization funnel on transformWithState. Timer-less by
     default (parity with ``stateful.track_funnel``); with
     ``abandon_timeout_ms`` set, ``events`` must carry a watermarked
-    ``eventTime`` column and incomplete funnels emit a negative-stage
+    event-time column (any name) and incomplete funnels emit a negative-stage
     abandonment row when the timer fires."""
     events = _prune_for_state(events, ("user_id", "event_type", "ts"))
     return events.filter(events["user_id"].isNotNull()).groupBy("user_id").transformWithStateInPandas(
@@ -342,7 +342,7 @@ def unique_visits_v2(events: DataFrame, ttl: bool = False) -> DataFrame:
 
 def detect_bounces_v2(events: DataFrame) -> DataFrame:
     """T3 on transformWithState. ``events`` must carry a watermarked
-    ``eventTime`` timestamp column for the timers to fire."""
+    timestamp column (any name) for the timers to fire."""
     events = _prune_for_state(events, ("mid", "page_id", "last_page_id", "ts"))
     return events.groupBy("mid").transformWithStateInPandas(
         BounceProcessor(),

@@ -8,8 +8,8 @@ Cold subprocesses are the point — the r15 regressions the driver saw
 (dedup_threshold_sweep 0.44x etc.) only show on a cold JVM where the
 first rep pays cache materialization, which warm UI metrics hide.
 
-    python scripts/ab_env.py --var SPARK_GRAFT_CACHED_PLAN_AQE \
-        --a true --b false --queries dedup_threshold_sweep,minhash_lsh \
+    python scripts/ab_env.py --var SPARK_GRAFT_ARROW_SHINGLES \
+        --a 0 --b 1 --queries dedup_threshold_sweep,minhash_lsh \
         [--reps 4] [--sf-dir /root/testdata/sf0.1]
 
 NEVER runs two Spark jobs at once (the one hard timing rule on this VM).

@@ -670,9 +670,9 @@ def test_packed_sequences_caller_owned_persist_is_bounded(spark):
             jrdd.unpersist()
 
 
-def test_stateful_kernels_prune_columns_before_python_boundary(spark):
+def test_stateful_kernels_prune_columns_before_python_boundary(spark, tmp_path):
     """r16 streaming fix (guide §4.1): stateful kernels must project to
-    exactly the columns they read (plus the watermarked ``eventTime``)
+    exactly the columns they read (plus the watermarked event-time column)
     BEFORE the keyed shuffle and the JVM→Arrow→Python boundary — Spark
     cannot prune columns it cannot see into an opaque Python function,
     so a wide production log schema would otherwise cross both in full
@@ -685,19 +685,22 @@ def test_stateful_kernels_prune_columns_before_python_boundary(spark):
         detect_bounces_batch,
     )
 
-    wide = spark.createDataFrame(
+    unmarked = spark.createDataFrame(
         [("101", "home", None, "1", 10000, "x" * 64, 1.5)],
         "mid: string, page_id: string, last_page_id: string, is_new: string,"
         " ts: long, payload: string, score: double",
     ).withColumn("eventTime", F.timestamp_millis(F.col("ts")))
+    # watermarks exist only on streams (batch plans drop them)
+    wide = spark.readStream.schema(unmarked.schema).json(str(tmp_path)).withWatermark("eventTime", "1 second")
 
     pruned = _prune_for_state(wide, ("mid", "page_id", "ts"))
-    # Exactly the kernel columns, plus eventTime kept for watermarks/timers.
+    # Exactly the kernel columns, plus the watermarked column for timers.
     assert pruned.columns == ["mid", "page_id", "ts", "eventTime"]
 
-    no_et = _prune_for_state(wide.drop("eventTime"), ("mid", "ts"))
+    # A timestamp without a watermark is payload like any other column.
+    no_et = _prune_for_state(unmarked, ("mid", "ts"))
     assert no_et.columns == ["mid", "ts"]
 
     # The kernel result must not depend on the pruned payload columns.
-    out = {(r.mid, r.ts) for r in detect_bounces_batch(wide).collect()}
+    out = {(r.mid, r.ts) for r in detect_bounces_batch(unmarked).collect()}
     assert out == {("101", 10000)}

@@ -24,9 +24,23 @@ def test_upsert_sink_idempotent_on_replay(spark, tmp_path):
 
 
 def test_dedup_last_wins_tie_break_deterministic(spark):
-    df = spark.createDataFrame([(1, "x", 100), (1, "y", 100)], ["id", "p", "ts"])
-    out = [tuple(r) for r in dedup_last_wins(df, ["id"], "ts").collect()]
-    assert len(out) == 1
+    """A version tie goes to the largest remaining columns, whatever the
+    input order and the shuffle width."""
+    rows = [(1, "x", 100, 5), (1, "y", 100, 3), (1, "z", 90, 9), (2, "a", 7, 1), (2, "a", 7, 2)]
+    want = {(1, "y", 100, 3), (2, "a", 7, 2)}
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in ("1", "32"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            for order in (rows, rows[::-1]):
+                df = spark.createDataFrame(order, ["id", "p", "ts", "q"]).repartition(int(parts))
+                out = {tuple(r) for r in dedup_last_wins(df, ["id"], "ts").collect()}
+                assert out == want, (parts, order)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", width)
+    # map columns cannot be sorted, so they take no part in the tie-break
+    with_map = spark.createDataFrame([(1, {"k": "v"}, 100), (1, {"k": "w"}, 90)], "id int, m map<string,string>, ts int")
+    assert [r.ts for r in dedup_last_wins(with_map, ["id"], "ts").collect()] == [100]
 
 
 def test_cdc_route_and_allowlist(spark):
