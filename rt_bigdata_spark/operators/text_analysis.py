@@ -939,6 +939,12 @@ def bpe_encode_counts(
     to the unchunked form. Greedy application order is preserved:
     merges take effect strictly in training order regardless of slice
     boundaries (chunked ≡ unchunked, property-tested).
+
+    Precondition: ``enc`` must come from ``bpe_trained_encoder`` trained on
+    the same tokenized corpus as ``df``. Document tokens missing from
+    ``enc`` are dropped by the inner join, so a foreign ``enc``
+    undercounts silently; with ``enc=None`` the vocabulary is derived
+    from ``df`` itself and covers every token.
     """
     toks = tokenize(F.coalesce(F.col(text_col), F.lit("")))
     doc_toks = ensure_parallelism(df).select(F.col(id_col), F.explode(toks).alias("tok"))
@@ -1057,6 +1063,12 @@ def tokenizer_fertility(
     to one row per source: one scan, the vocab distinct, and one
     low-cardinality group agg whose partial combine collapses each
     task to O(sources) rows before the exchange.
+
+    Precondition: ``enc`` must come from ``bpe_trained_encoder`` trained on
+    the same tokenized corpus as ``df``. Document tokens missing from
+    ``enc`` are dropped by the inner join, so a foreign ``enc``
+    undercounts silently; with ``enc=None`` the vocabulary is derived
+    from ``df`` itself and covers every token.
     """
     toks = tokenize(F.coalesce(F.col(text_col), F.lit("")))
     doc_toks = ensure_parallelism(df).select(
@@ -1152,7 +1164,13 @@ def _bpe_token_ids(
     Spark expressions (``F.ascii`` for base symbols, lowest 255+step
     for merge products), so the output is bit-identical; only the plan
     shrinks (no distinct exchange, no replace chain, no per-symbol
-    explode — the r16 encode-family de-scheduling)."""
+    explode — the r16 encode-family de-scheduling).
+
+    Precondition: ``enc`` must come from ``bpe_trained_encoder`` trained on
+    the same tokenized corpus as ``df``. Document tokens missing from
+    ``enc`` are dropped by the inner join, so a foreign ``enc``
+    undercounts silently; with ``enc=None`` the vocabulary is derived
+    from ``df`` itself and covers every token."""
     spark = df.sparkSession
     toks = tokenize(F.coalesce(F.col(text_col), F.lit("")))
     doc_toks = ensure_parallelism(df).select(

@@ -3718,7 +3718,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whose outputs are each ≤ queries × k = 50 rows, yet the warm
     # query scheduled their 33 jobs strictly sequentially — 4.6 s of
     # executor CPU stretched over ~8 s of wall with 32 cores mostly
-    # idle (bench_metrics: 33 jobs / 195 tasks). Each arm is now built
+    # idle (33 jobs / 195 tasks per warm run). Each arm is now built
     # AND collected on its own driver thread, so the scheduler
     # back-fills one arm's straggler tail with the next arm's tasks
     # (FIFO default = exactly the back-fill the guide describes). Same
@@ -4383,273 +4383,155 @@ WHERE rk <= {k}
 
 
 for spec in [
-    # r14 ROTATION LEDGER: half of the 36-spec r9-green cohort (due r16)
-    # pulled back at priority=40 (bm25_search, bpe_merges, bpe_encode,
-    # concat_pack, contamination, contrastive_samples, dedup_keepers,
-    # heavy_hitters, media_dedup, media_features, media_frames,
-    # media_resize, semantic_clusters here; cohort_retention,
-    # dim_history, dim_history_merge, event_funnel,
-    # province_stats_approx in warehouse.py); the other half rotates in
-    # at r15. Nineteen r13-green occupants yielded at priority=80
-    # (ann_ivf_topk, media_embedding, dup_cluster_sizes, filtered_ann,
-    # semdedup, winnow_fingerprint, pq_distortion, minhash_lsh,
-    # ivfpq_rerank_topk, ivfpq_cell_stats here + warehouse's
-    # session_stats, sales_grouping_sets, rolling_revenue,
-    # salted_enrichment, sales_rollup, customer_activity,
-    # point_in_time_join, active_users, keyword_stats_4product). The
-    # per-spec comments below this point are the PRIOR rounds' ledger.
-    QuerySpec("dedup_exact", q_dedup_exact, _ORACLE_DEDUP_EXACT, ("dedup",), bench=True, priority=40),
-    QuerySpec("doc_fingerprint", q_doc_fingerprint, _ORACLE_FINGERPRINT, ("text",), priority=40),
-    QuerySpec("text_quality", q_text_quality, _ORACLE_QUALITY, ("text",), bench=True, priority=80),
-    QuerySpec("language_id", q_language_id, _ORACLE_LANG, ("text",), priority=80),
-    # r15 sixth registration: Unicode script/charset profile — the
-    # pre-langid curation signal; new spec, must land in the window
-    # (province_stats_sql — four greens, re-greened r14 — yielded)
-    QuerySpec("script_profile", q_script_profile, _ORACLE_SCRIPT_PROFILE, ("text", "profiling"), priority=10),
-    # r15 eleventh registration: per-source length-distribution PSI —
-    # the feed-drift monitor; new spec, must land in the window
-    # (bpe_encode — four greens, re-greened r14 — yielded)
-    QuerySpec("source_length_psi", q_source_length_psi, _source_length_psi_oracle(), ("profiling", "audit"), priority=10),
-    QuerySpec("token_stats", q_token_stats, _ORACLE_TOKEN_STATS, ("text",), priority=80),
-    QuerySpec("ngram_jaccard", q_ngram_jaccard, _ORACLE_JACCARD, ("dedup",), bench=True, priority=80),
-    # r15 tenth registration: asymmetric containment (the quotation/
-    # subset-dup detector); new spec, must land in the window
-    # (media_resize — four greens, re-greened r14 — yielded)
-    QuerySpec("ngram_containment", q_ngram_containment, _ORACLE_CONTAINMENT_PAIRS, ("dedup", "profiling"), priority=10),
-    QuerySpec("minhash_recall", q_minhash_recall, _minhash_recall_oracle(), ("dedup", "audit", "approx"), priority=40),
-    # r15 ninth registration: character-level edit-distance verify of
-    # the LSH candidate set — the short-doc-precise third verifier next
-    # to Jaccard and cosine; new spec, must land in the window
-    # (ngram_novelty — four greens, re-greened r14 — yielded)
-    QuerySpec("edit_distance_verify", q_edit_distance_verify, _edit_distance_verify_oracle(), ("dedup", "approx", "verify"), priority=10),
-    QuerySpec("ann_cosine_topk", q_ann_cosine_topk, _ORACLE_ANN, ("similarity",), bench=True, priority=40),
-    # minhash_lsh: twice-green (r4, r5) — yielded its slot to the r6
-    # quality_gate_threshold (still benched + oracle-verified every CI run)
-    QuerySpec("minhash_lsh", q_minhash_lsh, _minhash_lsh_oracle(), ("dedup", "approx"), bench=True, priority=80),
-    # spanning forms measure 0.9 s / 1.5 s at sf0.1 — sub-3 s tail, excluded
-    # from the bench tier per the r12 headline-set policy (BASELINE.md)
-    QuerySpec("minhash_spanning", q_minhash_spanning, _minhash_spanning_oracle(), ("dedup", "approx", "cap"), priority=40),
-    QuerySpec("embedding_spanning", q_embedding_spanning, _emb_spanning_oracle(), ("dedup", "approx", "cap"), priority=40),
-    # r10: threshold-sensitivity audit — new spec, must land in the
-    # window (contamination, thrice-green, yielded its slot)
-    QuerySpec(
-        "dedup_threshold_sweep",
-        q_dedup_threshold_sweep,
-        _dedup_threshold_sweep_oracle(),
-        ("dedup", "approx", "profiling"),
-        bench=True,
-        priority=80,
-    ),
-    # r13: simhash (4 driver greens, last r12) yielded its window slot
-    # to the new embedding_spanning registration
-    QuerySpec("simhash", q_simhash, _ORACLE_SIMHASH, ("dedup", "approx"), bench=True, priority=80),
-    # ann_lsh_topk: twice-green (r4, r5) — yielded its slot to the r6
-    # media_dedup composition (still oracle-verified every CI run)
-    # r13: ann_lsh_topk (4 driver greens, last r12) yielded its window
-    # slot to the new tokenizer_fertility registration
-    QuerySpec("ann_lsh_topk", q_ann_lsh_topk, _ann_lsh_oracle(), ("similarity", "approx"), priority=80),
-    QuerySpec("tokenizer_fertility", q_tokenizer_fertility, _tokenizer_fertility_oracle(), ("text", "tokenizer", "audit"), priority=40),
-    # ann_ivf_topk: twice-green (r4, r5) — yielded its slot to the r6
-    # bpe_merges loop (still oracle-verified every CI run)
-    QuerySpec("ann_ivf_topk", q_ann_ivf_topk, _ann_ivf_oracle(), ("similarity", "approx"), priority=80),
-    # r14: the trained-centroid IVF production path (r13 verdict item 1)
-    # — new spec, must land in the window on its first round
-    QuerySpec("ann_ivf_trained", q_ann_ivf_trained, _ann_ivf_trained_oracle(), ("similarity", "approx", "model"), priority=10),
-    # (six greens r1-r7; yielded its slot in r8's second batch)
-    QuerySpec("embedding_dedup", q_embedding_dedup, _emb_lsh_oracle(threshold=0.4), ("dedup", "approx"), bench=True, priority=80),
-    QuerySpec("embedding_dedup_lsh", q_embedding_dedup_lsh, _emb_lsh_oracle(), ("dedup", "approx"), bench=True, priority=40),
-    # r10: the SemDeDup τ tuning curve — new spec, must land in the
-    # window (bpe_encode, thrice-green, yielded its slot;
-    # bpe_encode_tokens keeps the tokenizer family in-window)
-    QuerySpec(
-        "embedding_tau_sweep",
-        q_embedding_tau_sweep,
-        _embedding_tau_sweep_oracle(),
-        ("dedup", "approx", "profiling"),
-        bench=True,
-        priority=80,
-    ),
-    # first oracle-backed rows (r6): hex-chain kernel + hex frame bytes
-    # made both SQL-expressible after five rounds of rows-only checks
-    QuerySpec("media_features", q_media_features, _media_features_oracle(), ("multimodal",), priority=80),
-    QuerySpec("media_frames", q_media_frames, _ORACLE_MEDIA_FRAMES, ("multimodal",), priority=80),
-    QuerySpec("media_resize", q_media_resize, _ORACLE_MEDIA_RESIZE, ("multimodal",), priority=80),
-    # r15: the real stdlib-wave codec path driver-verified end to end
-    # (verdict r14 item 5); winnow_pairs — five greens — yielded
-    QuerySpec("media_wav_decode", q_media_wav_decode, _ORACLE_MEDIA_WAV_DECODE, ("multimodal", "codec"), priority=10),
-    QuerySpec("doc_curation", q_doc_curation, _ORACLE_CURATION, ("text", "dedup"), bench=True, priority=40),
-    QuerySpec("dup_clusters", q_dup_clusters, _ORACLE_CLUSTERS, ("dedup", "iterative"), bench=True, priority=40),
-    QuerySpec("doc_split", q_doc_split, _ORACLE_SPLIT_DOCS, ("sampling",), priority=40),
-    QuerySpec("cluster_split", q_cluster_split, _ORACLE_CLUSTER_SPLIT, ("sampling", "dedup"), bench=True, priority=80),
-    # r13: corpus_profile (4 driver greens, last r12) yielded its
-    # window slot to the new quality_classifier_trained registration
-    QuerySpec("corpus_profile", q_corpus_profile, _ORACLE_PROFILE, ("profiling", "agg"), priority=80),
-    QuerySpec("corpus_profile_approx", q_corpus_profile_approx, _ORACLE_PROFILE_APPROX, ("profiling", "agg", "approx"), priority=40),
-    QuerySpec("quality_gate", q_quality_gate, _ORACLE_QUALITY_GATE, ("profiling", "window_fn"), priority=80),
-    # round-6: the broadcast-threshold scale form of quality_gate
-    QuerySpec("quality_gate_threshold", q_quality_gate_threshold, _ORACLE_QUALITY_GATE_THRESHOLD, ("profiling", "approx", "scale"), bench=True, priority=40),
-    QuerySpec("unigram_surprisal", q_unigram_surprisal, _ORACLE_SURPRISAL, ("text", "profiling"), priority=80),
-    QuerySpec("doc_keywords", q_doc_keywords, _ORACLE_KEYWORDS, ("text", "window_fn"), bench=True, priority=40),
-    QuerySpec("source_mix", q_source_mix, _mix_oracle(), ("sampling",), priority=80),
-    # priority=10: the round-4 additions were parked at 70 (outside the
-    # driver's 50-row window) for one round; round 5 rotates them IN —
-    # they are the only oracle-backed specs that have never had a
-    # driver row. Seven multi-round-green trivials yielded their slots
-    # (demoted to 80; still oracle-verified every CI run).
-    QuerySpec("repetition_stats", q_repetition_stats, _ORACLE_REPETITION, ("text", "quality"), bench=True, priority=40),
-    QuerySpec("pii_scrub", q_pii_scrub, _pii_oracle(), ("text", "safety"), priority=40),
-    QuerySpec("contamination", q_contamination, _ORACLE_CONTAMINATION, ("text", "dedup", "safety"), bench=True, priority=80),
-    # r15 fourth registration: Bloom-filter decontamination — the
-    # fixed-size-state membership path for eval-suite gram sets too
-    # large to broadcast or join raw; registered as the sketch-audit
-    # shape (exact arm beside the Bloom arm, FP accounting hash-
-    # checked). New spec, must land in the window (event_pivot — four
-    # greens, re-greened r14 — yielded its slot).
-    QuerySpec("bloom_contamination", q_bloom_contamination, _bloom_contamination_oracle(), ("text", "safety", "approx", "audit"), priority=10),
-    QuerySpec("doc_chunks", q_doc_chunks, _ORACLE_CHUNKS, ("text", "packing"), bench=True, priority=40),
-    # r15 fifth registration: overlapping (strided) RAG chunking — the
-    # retrieval-ingest twin of doc_chunks; new spec, must land in the
-    # window (order_priority — four greens, re-greened r14 — yielded)
-    QuerySpec("doc_chunks_overlap", q_doc_chunks_overlap, _ORACLE_CHUNKS_OVERLAP, ("text", "packing"), priority=10),
-    QuerySpec("token_budget", q_token_budget, _ORACLE_TOKEN_BUDGET, ("sampling", "packing"), bench=True, priority=40),
-    QuerySpec("filtered_ann", q_filtered_ann, _ORACLE_FILTERED_ANN, ("similarity", "join"), priority=80),
-    QuerySpec("filtered_ann_indexed", q_filtered_ann_indexed, _filtered_ann_ivf_oracle(), ("similarity", "join", "index"), bench=True, priority=40),
-    # round-5 additions (training-order / packing bookkeeping); three
-    # more multi-round greens (payment_wide, uv_dedup, log_split)
-    # yielded window slots so these verify on their first round.
-    QuerySpec("concat_pack", q_concat_pack, _ORACLE_CONCAT_PACK, ("packing",), priority=80),
-    QuerySpec("paragraph_dedup", q_paragraph_dedup, _ORACLE_PARAGRAPH_DEDUP, ("dedup", "text"), bench=True, priority=40),
-    QuerySpec("global_shuffle", q_global_shuffle, _ORACLE_GLOBAL_SHUFFLE, ("sampling", "order"), priority=40),
-    QuerySpec("mix_schedule", q_mix_schedule, _mix_schedule_oracle(), ("sampling", "order"), priority=40),
-    # round-5 second batch (semantic clustering, search, versioning);
-    # five multi-round greens (text_quality, ann_cosine_topk,
-    # corpus_profile, quality_gate, unigram_surprisal) yielded window
-    # slots so these verify on their first round.
-    QuerySpec("semantic_clusters", q_semantic_clusters, _ORACLE_SEMANTIC_CLUSTERS, ("clustering", "iterative"), bench=True, priority=80),
-    QuerySpec("semdedup", q_semdedup, _ORACLE_SEMDEDUP, ("clustering", "dedup"), bench=True, priority=80),
-    QuerySpec("bm25_search", q_bm25_search, _bm25_oracle(), ("text", "search"), bench=True, priority=80),
-    # r15 seventh registration: hybrid sparse+dense retrieval with RRF
-    # fusion — the standard RAG composition; new spec, must land in the
-    # window (dsir_importance — four greens, re-greened r14 — yielded)
-    QuerySpec("hybrid_search_rrf", q_hybrid_search_rrf, _hybrid_rrf_oracle(), ("text", "search", "similarity"), priority=10),
-    QuerySpec("stratified_sample", q_stratified_sample, _ORACLE_STRATIFIED, ("sampling",), priority=40),
-    # r15: exactly-N weighted sampling with unbiased subset-sum
-    # estimators (priority sampling); nation_trade — five greens —
-    # yielded its window slot
-    QuerySpec("priority_sample", q_priority_sample, _ORACLE_PRIORITY_SAMPLE, ("sampling", "training"), priority=10),
-    QuerySpec("corpus_diff", q_corpus_diff, _ORACLE_CORPUS_DIFF, ("versioning", "join"), priority=80),
-    # round-5 third batch (text→vector bridge + embedding compression)
-    QuerySpec("doc_embedding", q_doc_embedding, _ORACLE_DOC_EMBEDDING, ("text", "embedding"), priority=80),
-    QuerySpec("embedding_project", q_embedding_project, _embedding_project_oracle(), ("embedding",), priority=80),
-    # r12: the vector ingest-contract audit — in-window for its first
-    # driver row (log_split, five greens, yielded)
-    QuerySpec("embedding_validation", q_embedding_validation, _ORACLE_EMB_VALIDATION, ("embedding", "audit"), priority=45),
-    # round-5 fourth batch (bounded-state sketch estimator; sales_rollup
-    # — green r1-r4 — yielded its slot)
-    QuerySpec("heavy_hitters", q_heavy_hitters, _heavy_hitters_oracle(), ("text", "approx", "sketch"), priority=80),
-    # round-5 fifth batch (model-based filtering + sub-document exact
-    # substrings); with event_transitions/events_rollup in warehouse,
-    # four multi-round greens (order_wide_enriched, shipping_priority,
-    # supplier_volume, product_stats — green r1-r4) yield their slots.
-    QuerySpec("quality_classifier", q_quality_classifier, _quality_classifier_oracle(), ("text", "quality", "model"), bench=True, priority=40),
-    QuerySpec("quality_classifier_trained", q_quality_classifier_trained, _quality_classifier_trained_oracle(), ("text", "quality", "model"), priority=40),
-    # r15: the distributed-trained committed model becomes a registered
-    # production path (verdict r14 item 4); embedding_project — five
-    # greens — yielded its window slot
-    QuerySpec("quality_classifier_distributed", q_quality_classifier_distributed, _quality_classifier_distributed_oracle(), ("text", "quality", "model"), priority=10),
-    QuerySpec("substring_dedup", q_substring_dedup, _ORACLE_SUBSTRING_DEDUP, ("dedup", "text"), bench=True, priority=40),
-    # round-5 sixth batch (tokenizer induction; order_wide — green
-    # r1-r4 — yields its slot alongside warehouse's keyword_stats)
-    QuerySpec("bpe_pairs", q_bpe_pairs, _ORACLE_BPE_PAIRS, ("text", "tokenizer"), priority=80),
-    # round-6: the full driver-controlled merge loop (one step = bpe_pairs)
-    QuerySpec("bpe_merges", q_bpe_merges, _bpe_merges_oracle(), ("text", "tokenizer", "iterative"), bench=True, priority=80),
-    QuerySpec("bpe_encode", q_bpe_encode, _bpe_encode_oracle(), ("text", "tokenizer"), bench=True, priority=80),
-    # round-8: full tokenizer application (semdedup — thrice-green r5-r7 —
-    # yields its slot; still CI-oracle-verified every run)
-    QuerySpec("bpe_encode_tokens", q_bpe_encode_tokens, _bpe_encode_tokens_oracle(), ("text", "tokenizer"), bench=True, priority=80),
-    # round-8: the terminal packed-sequence artifact (filtered_ann —
-    # thrice-green r5-r7, indexed sibling stays in-window — yields its slot)
-    QuerySpec("packed_sequences", q_packed_sequences, _packed_sequences_oracle(), ("text", "tokenizer", "packing"), bench=True, priority=80),
-    # round-5 seventh batch (edit-robust fingerprinting; with
-    # warehouse's dq_orders, visitor_stats + province_stats — green
-    # r1-r4 — yield their slots)
-    # (thrice-green r5-r7; yielded its slot in r8's second batch)
-    QuerySpec("winnow_fingerprint", q_winnow_fingerprint, _ORACLE_WINNOW, ("text", "dedup"), bench=True, priority=80),
-    # round-5 eighth batch (retrieval-training sample mining;
-    # cluster_split — green r1-r4 — yields its slot)
-    QuerySpec("contrastive_samples", q_contrastive_samples, _ORACLE_CONTRASTIVE, ("similarity", "sampling", "training"), priority=80),
-    # round-5 ninth batch (bigram-LM perplexity; dup_clusters — green
-    # r1-r4 — yields its slot)
-    QuerySpec("bigram_surprisal", q_bigram_surprisal, _ORACLE_BIGRAM_SURPRISAL, ("text", "profiling"), priority=80),
-    # r15 eighth registration: trigram stupid backoff on a held-out
-    # split — the top rung of the surprisal ladder; new spec, must land
-    # in the window (dup_source_matrix — four greens, re-greened r14 —
-    # yielded)
-    QuerySpec("trigram_surprisal", q_trigram_surprisal, _ORACLE_TRIGRAM_SURPRISAL, ("text", "profiling"), priority=10),
-    # r11 additions: never driver-verified -> must enter the window now
-    # (scalar_datetime, json_props, product_stats — thrice-green —
-    # yielded their slots).
-    QuerySpec("dsir_importance", q_dsir_importance, _ORACLE_DSIR, ("text", "sampling", "training"), bench=True, priority=80),
-    QuerySpec("dup_source_matrix", q_dup_source_matrix, _ORACLE_DUP_SOURCE_MATRIX, ("dedup", "profiling"), bench=True, priority=80),
-    QuerySpec("ngram_novelty", q_ngram_novelty, _ORACLE_NGRAM_NOVELTY, ("text", "profiling"), priority=80),
-    # r12: the per-feed operational read of the novelty curve (new
-    # registrations start at priority=70 — CI-verified every run,
-    # outside the driver window until the planner rotates it in)
-    QuerySpec("source_novelty", q_source_novelty, _ORACLE_SOURCE_NOVELTY, ("text", "profiling"), bench=True, priority=45),
-    # (doc_curation — green r1-r4 — yields its slot)
-    QuerySpec("dedup_keepers", q_dedup_keepers, _ORACLE_DEDUP_KEEPERS, ("dedup", "graph", "quality"), bench=True, priority=80),
-    # r15: the adversarial-diameter CC fallback driver-verified on a
-    # forced-diameter fixture graph (verdict r14 item 8, stretch);
-    # customer_max_order — five greens — yielded
-    QuerySpec("cc_two_phase", q_cc_two_phase, _ORACLE_CC_TWO_PHASE, ("dedup", "graph", "iterative"), priority=10),
-    # round-5 eleventh batch (first hash-matched multimodal row;
-    # dedup_exact — green r1-r4, trivial — yields its slot so the
-    # re-shaped embedding_dedup keeps its place)
-    # (thrice-green r5-r7; yielded its slot in r8's third batch —
-    # media_dedup composes the same encoder and stays in-window)
-    QuerySpec("media_embedding", q_media_embedding, _ORACLE_MEDIA_EMBEDDING, ("multimodal", "embedding"), priority=80),
-    # round-6: the composed multimodal dedup pipeline (pseudo-encoder →
-    # LSH cells → exact-cosine verify)
-    QuerySpec("media_dedup", q_media_dedup, _media_dedup_oracle(), ("multimodal", "dedup"), bench=True, priority=80),
-    # round-5 thirteenth batch (MOSS pair discovery; customer_quartiles
-    # — green r4 — yields its slot)
-    QuerySpec("winnow_pairs", q_winnow_pairs, _ORACLE_WINNOW_PAIRS, ("dedup", "text", "search"), bench=True, priority=80),
-    # round-6 first batch: the 100 TB token-budget shape (same oracle as
-    # the exact form — subset-equivalence by the prefix property)
-    QuerySpec("token_budget_threshold", q_token_budget_threshold, _ORACLE_TOKEN_BUDGET, ("sampling", "packing", "scale"), bench=True, priority=40),
-    # round-8 second batch: four multi-round greens yield their slots
-    # (embedding_dedup — six greens r1-r7, LSH sibling stays in-window;
-    # winnow_fingerprint — thrice-green r5-r7; warehouse's active_users
-    # — thrice-green, HLL audit keeps the family; point_in_time_join —
-    # thrice-green, dim_history/merge keep the SCD family). In: the
-    # approximate-index recall audit, temperature sampling, and the
-    # PQ-compressed vector store + its ADC search.
-    QuerySpec("ann_recall", q_ann_recall, _ann_recall_oracle(), ("similarity", "approx", "audit"), bench=True, priority=80),
-    # r10: the n_probe tuning curve — new spec, must land in the window
-    # (media_resize, thrice-green, yielded its slot)
-    QuerySpec(
-        "ivf_nprobe_sweep",
-        q_ivf_nprobe_sweep,
-        _ivf_nprobe_sweep_oracle(),
-        ("similarity", "approx", "audit", "profiling"),
-        bench=True,
-        priority=80,
-    ),
-    QuerySpec("temperature_mix", q_temperature_mix, _ORACLE_TEMPERATURE_MIX, ("sampling", "order"), priority=80),
-    QuerySpec("pq_codes", q_pq_codes, _pq_codes_oracle(), ("similarity", "quantization", "iterative"), priority=80),
-    QuerySpec("pq_ann_topk", q_pq_ann_topk, _pq_ann_oracle(), ("similarity", "quantization", "approx"), bench=True, priority=80),
-    # r15 third registration: SQ8 scalar quantization — the byte-per-
-    # dimension compression completing the quantization family (flat
-    # PQ, IVF-PQ, SQ8); new spec, must land in the window
-    # (value_histogram — four greens, re-greened r14 — yielded its slot)
-    QuerySpec("sq8_ann_topk", q_sq8_ann_topk, _ORACLE_SQ8_ANN, ("similarity", "quantization", "approx"), priority=10),
-    # round-8 third batch: media_embedding (thrice-green r5-r7;
-    # media_dedup composes it and stays in-window) yields its slot to
-    # the IVF-PQ compressed-index probe.
-    QuerySpec("ivfpq_topk", q_ivfpq_topk, _ivfpq_oracle(), ("similarity", "quantization", "index"), priority=80),
-    QuerySpec("ivfpq_rerank_topk", q_ivfpq_rerank_topk, _ivfpq_rerank_oracle(k=10, shortlist=_IVFPQ_SHORTLIST), ("similarity", "quantization", "index"), bench=True, priority=80),
-    QuerySpec("pq_distortion", q_pq_distortion, _pq_distortion_oracle(), ("quantization", "profiling"), priority=80),
-    QuerySpec("ivfpq_cell_stats", q_ivfpq_cell_stats, _ivfpq_cell_stats_oracle(), ("quantization", "profiling", "index"), priority=80),
-    QuerySpec("dup_cluster_sizes", q_dup_cluster_sizes, _ORACLE_DUP_CLUSTER_SIZES, ("dedup", "profiling", "iterative"), bench=True, priority=80),
+    QuerySpec("dedup_exact", q_dedup_exact, _ORACLE_DEDUP_EXACT, ("dedup",)),
+    QuerySpec("doc_fingerprint", q_doc_fingerprint, _ORACLE_FINGERPRINT, ("text",)),
+    QuerySpec("text_quality", q_text_quality, _ORACLE_QUALITY, ("text",)),
+    QuerySpec("language_id", q_language_id, _ORACLE_LANG, ("text",)),
+    # Unicode script/charset profile — the pre-langid curation signal
+    QuerySpec("script_profile", q_script_profile, _ORACLE_SCRIPT_PROFILE, ("text", "profiling")),
+    # per-source length-distribution PSI — the feed-drift monitor
+    QuerySpec("source_length_psi", q_source_length_psi, _source_length_psi_oracle(), ("profiling", "audit")),
+    QuerySpec("token_stats", q_token_stats, _ORACLE_TOKEN_STATS, ("text",)),
+    QuerySpec("ngram_jaccard", q_ngram_jaccard, _ORACLE_JACCARD, ("dedup",)),
+    # asymmetric containment (the quotation/subset-dup detector)
+    QuerySpec("ngram_containment", q_ngram_containment, _ORACLE_CONTAINMENT_PAIRS, ("dedup", "profiling")),
+    QuerySpec("minhash_recall", q_minhash_recall, _minhash_recall_oracle(), ("dedup", "audit", "approx")),
+    # character-level edit-distance verify of the LSH candidate set —
+    # the short-doc-precise third verifier next to Jaccard and cosine
+    QuerySpec("edit_distance_verify", q_edit_distance_verify, _edit_distance_verify_oracle(), ("dedup", "approx", "verify")),
+    QuerySpec("ann_cosine_topk", q_ann_cosine_topk, _ORACLE_ANN, ("similarity",)),
+    QuerySpec("minhash_lsh", q_minhash_lsh, _minhash_lsh_oracle(), ("dedup", "approx")),
+    QuerySpec("minhash_spanning", q_minhash_spanning, _minhash_spanning_oracle(), ("dedup", "approx", "cap")),
+    QuerySpec("embedding_spanning", q_embedding_spanning, _emb_spanning_oracle(), ("dedup", "approx", "cap")),
+    # threshold-sensitivity audit
+    QuerySpec("dedup_threshold_sweep", q_dedup_threshold_sweep, _dedup_threshold_sweep_oracle(), ("dedup", "approx", "profiling")),
+    QuerySpec("simhash", q_simhash, _ORACLE_SIMHASH, ("dedup", "approx")),
+    QuerySpec("ann_lsh_topk", q_ann_lsh_topk, _ann_lsh_oracle(), ("similarity", "approx")),
+    QuerySpec("tokenizer_fertility", q_tokenizer_fertility, _tokenizer_fertility_oracle(), ("text", "tokenizer", "audit")),
+    QuerySpec("ann_ivf_topk", q_ann_ivf_topk, _ann_ivf_oracle(), ("similarity", "approx")),
+    # the trained-centroid IVF production path
+    QuerySpec("ann_ivf_trained", q_ann_ivf_trained, _ann_ivf_trained_oracle(), ("similarity", "approx", "model")),
+    QuerySpec("embedding_dedup", q_embedding_dedup, _emb_lsh_oracle(threshold=0.4), ("dedup", "approx")),
+    QuerySpec("embedding_dedup_lsh", q_embedding_dedup_lsh, _emb_lsh_oracle(), ("dedup", "approx")),
+    # the SemDeDup τ tuning curve
+    QuerySpec("embedding_tau_sweep", q_embedding_tau_sweep, _embedding_tau_sweep_oracle(), ("dedup", "approx", "profiling")),
+    # hex-chain kernel + hex frame bytes make both media decoders
+    # SQL-expressible
+    QuerySpec("media_features", q_media_features, _media_features_oracle(), ("multimodal",)),
+    QuerySpec("media_frames", q_media_frames, _ORACLE_MEDIA_FRAMES, ("multimodal",)),
+    QuerySpec("media_resize", q_media_resize, _ORACLE_MEDIA_RESIZE, ("multimodal",)),
+    # the real stdlib-wave codec path, end to end
+    QuerySpec("media_wav_decode", q_media_wav_decode, _ORACLE_MEDIA_WAV_DECODE, ("multimodal", "codec")),
+    QuerySpec("doc_curation", q_doc_curation, _ORACLE_CURATION, ("text", "dedup")),
+    QuerySpec("dup_clusters", q_dup_clusters, _ORACLE_CLUSTERS, ("dedup", "iterative")),
+    QuerySpec("doc_split", q_doc_split, _ORACLE_SPLIT_DOCS, ("sampling",)),
+    QuerySpec("cluster_split", q_cluster_split, _ORACLE_CLUSTER_SPLIT, ("sampling", "dedup")),
+    QuerySpec("corpus_profile", q_corpus_profile, _ORACLE_PROFILE, ("profiling", "agg")),
+    QuerySpec("corpus_profile_approx", q_corpus_profile_approx, _ORACLE_PROFILE_APPROX, ("profiling", "agg", "approx")),
+    QuerySpec("quality_gate", q_quality_gate, _ORACLE_QUALITY_GATE, ("profiling", "window_fn")),
+    # the broadcast-threshold scale form of quality_gate
+    QuerySpec("quality_gate_threshold", q_quality_gate_threshold, _ORACLE_QUALITY_GATE_THRESHOLD, ("profiling", "approx", "scale")),
+    QuerySpec("unigram_surprisal", q_unigram_surprisal, _ORACLE_SURPRISAL, ("text", "profiling")),
+    QuerySpec("doc_keywords", q_doc_keywords, _ORACLE_KEYWORDS, ("text", "window_fn")),
+    QuerySpec("source_mix", q_source_mix, _mix_oracle(), ("sampling",)),
+    QuerySpec("repetition_stats", q_repetition_stats, _ORACLE_REPETITION, ("text", "quality")),
+    QuerySpec("pii_scrub", q_pii_scrub, _pii_oracle(), ("text", "safety")),
+    QuerySpec("contamination", q_contamination, _ORACLE_CONTAMINATION, ("text", "dedup", "safety")),
+    # Bloom-filter decontamination — the fixed-size-state membership
+    # path for eval-suite gram sets too large to broadcast or join raw;
+    # registered as the sketch-audit shape (exact arm beside the Bloom
+    # arm, FP accounting hash-checked)
+    QuerySpec("bloom_contamination", q_bloom_contamination, _bloom_contamination_oracle(), ("text", "safety", "approx", "audit")),
+    QuerySpec("doc_chunks", q_doc_chunks, _ORACLE_CHUNKS, ("text", "packing")),
+    # overlapping (strided) RAG chunking — the retrieval-ingest twin
+    # of doc_chunks
+    QuerySpec("doc_chunks_overlap", q_doc_chunks_overlap, _ORACLE_CHUNKS_OVERLAP, ("text", "packing")),
+    QuerySpec("token_budget", q_token_budget, _ORACLE_TOKEN_BUDGET, ("sampling", "packing")),
+    QuerySpec("filtered_ann", q_filtered_ann, _ORACLE_FILTERED_ANN, ("similarity", "join")),
+    QuerySpec("filtered_ann_indexed", q_filtered_ann_indexed, _filtered_ann_ivf_oracle(), ("similarity", "join", "index")),
+    # training-order / packing bookkeeping
+    QuerySpec("concat_pack", q_concat_pack, _ORACLE_CONCAT_PACK, ("packing",)),
+    QuerySpec("paragraph_dedup", q_paragraph_dedup, _ORACLE_PARAGRAPH_DEDUP, ("dedup", "text")),
+    QuerySpec("global_shuffle", q_global_shuffle, _ORACLE_GLOBAL_SHUFFLE, ("sampling", "order")),
+    QuerySpec("mix_schedule", q_mix_schedule, _mix_schedule_oracle(), ("sampling", "order")),
+    # semantic clustering, search, versioning
+    QuerySpec("semantic_clusters", q_semantic_clusters, _ORACLE_SEMANTIC_CLUSTERS, ("clustering", "iterative")),
+    QuerySpec("semdedup", q_semdedup, _ORACLE_SEMDEDUP, ("clustering", "dedup")),
+    QuerySpec("bm25_search", q_bm25_search, _bm25_oracle(), ("text", "search")),
+    # hybrid sparse+dense retrieval with RRF fusion — the standard RAG
+    # composition
+    QuerySpec("hybrid_search_rrf", q_hybrid_search_rrf, _hybrid_rrf_oracle(), ("text", "search", "similarity")),
+    QuerySpec("stratified_sample", q_stratified_sample, _ORACLE_STRATIFIED, ("sampling",)),
+    # exactly-N weighted sampling with unbiased subset-sum estimators
+    # (priority sampling)
+    QuerySpec("priority_sample", q_priority_sample, _ORACLE_PRIORITY_SAMPLE, ("sampling", "training")),
+    QuerySpec("corpus_diff", q_corpus_diff, _ORACLE_CORPUS_DIFF, ("versioning", "join")),
+    # text→vector bridge + embedding compression
+    QuerySpec("doc_embedding", q_doc_embedding, _ORACLE_DOC_EMBEDDING, ("text", "embedding")),
+    QuerySpec("embedding_project", q_embedding_project, _embedding_project_oracle(), ("embedding",)),
+    # the vector ingest-contract audit
+    QuerySpec("embedding_validation", q_embedding_validation, _ORACLE_EMB_VALIDATION, ("embedding", "audit")),
+    # bounded-state sketch estimator
+    QuerySpec("heavy_hitters", q_heavy_hitters, _heavy_hitters_oracle(), ("text", "approx", "sketch")),
+    # model-based filtering + sub-document exact substrings
+    QuerySpec("quality_classifier", q_quality_classifier, _quality_classifier_oracle(), ("text", "quality", "model")),
+    QuerySpec("quality_classifier_trained", q_quality_classifier_trained, _quality_classifier_trained_oracle(), ("text", "quality", "model")),
+    # the distributed-trained committed model as a production path
+    QuerySpec("quality_classifier_distributed", q_quality_classifier_distributed, _quality_classifier_distributed_oracle(), ("text", "quality", "model")),
+    QuerySpec("substring_dedup", q_substring_dedup, _ORACLE_SUBSTRING_DEDUP, ("dedup", "text")),
+    # tokenizer induction
+    QuerySpec("bpe_pairs", q_bpe_pairs, _ORACLE_BPE_PAIRS, ("text", "tokenizer")),
+    # the full driver-controlled merge loop (one step = bpe_pairs)
+    QuerySpec("bpe_merges", q_bpe_merges, _bpe_merges_oracle(), ("text", "tokenizer", "iterative")),
+    QuerySpec("bpe_encode", q_bpe_encode, _bpe_encode_oracle(), ("text", "tokenizer")),
+    # full tokenizer application
+    QuerySpec("bpe_encode_tokens", q_bpe_encode_tokens, _bpe_encode_tokens_oracle(), ("text", "tokenizer")),
+    # the terminal packed-sequence artifact
+    QuerySpec("packed_sequences", q_packed_sequences, _packed_sequences_oracle(), ("text", "tokenizer", "packing")),
+    # edit-robust fingerprinting
+    QuerySpec("winnow_fingerprint", q_winnow_fingerprint, _ORACLE_WINNOW, ("text", "dedup")),
+    # retrieval-training sample mining
+    QuerySpec("contrastive_samples", q_contrastive_samples, _ORACLE_CONTRASTIVE, ("similarity", "sampling", "training")),
+    # bigram-LM perplexity
+    QuerySpec("bigram_surprisal", q_bigram_surprisal, _ORACLE_BIGRAM_SURPRISAL, ("text", "profiling")),
+    # trigram stupid backoff on a held-out split — the top rung of the
+    # surprisal ladder
+    QuerySpec("trigram_surprisal", q_trigram_surprisal, _ORACLE_TRIGRAM_SURPRISAL, ("text", "profiling")),
+    QuerySpec("dsir_importance", q_dsir_importance, _ORACLE_DSIR, ("text", "sampling", "training")),
+    QuerySpec("dup_source_matrix", q_dup_source_matrix, _ORACLE_DUP_SOURCE_MATRIX, ("dedup", "profiling")),
+    QuerySpec("ngram_novelty", q_ngram_novelty, _ORACLE_NGRAM_NOVELTY, ("text", "profiling")),
+    # the per-feed operational read of the novelty curve
+    QuerySpec("source_novelty", q_source_novelty, _ORACLE_SOURCE_NOVELTY, ("text", "profiling")),
+    QuerySpec("dedup_keepers", q_dedup_keepers, _ORACLE_DEDUP_KEEPERS, ("dedup", "graph", "quality")),
+    # the adversarial-diameter CC fallback on a forced-diameter
+    # fixture graph
+    QuerySpec("cc_two_phase", q_cc_two_phase, _ORACLE_CC_TWO_PHASE, ("dedup", "graph", "iterative")),
+    # first hash-matched multimodal row
+    QuerySpec("media_embedding", q_media_embedding, _ORACLE_MEDIA_EMBEDDING, ("multimodal", "embedding")),
+    # the composed multimodal dedup pipeline (pseudo-encoder → LSH
+    # cells → exact-cosine verify)
+    QuerySpec("media_dedup", q_media_dedup, _media_dedup_oracle(), ("multimodal", "dedup")),
+    # MOSS pair discovery
+    QuerySpec("winnow_pairs", q_winnow_pairs, _ORACLE_WINNOW_PAIRS, ("dedup", "text", "search")),
+    # the 100 TB token-budget shape (same oracle as the exact form —
+    # subset-equivalence by the prefix property)
+    QuerySpec("token_budget_threshold", q_token_budget_threshold, _ORACLE_TOKEN_BUDGET, ("sampling", "packing", "scale")),
+    # the approximate-index recall audit, temperature sampling, and the
+    # PQ-compressed vector store + its ADC search
+    QuerySpec("ann_recall", q_ann_recall, _ann_recall_oracle(), ("similarity", "approx", "audit")),
+    # the n_probe tuning curve
+    QuerySpec("ivf_nprobe_sweep", q_ivf_nprobe_sweep, _ivf_nprobe_sweep_oracle(), ("similarity", "approx", "audit", "profiling")),
+    QuerySpec("temperature_mix", q_temperature_mix, _ORACLE_TEMPERATURE_MIX, ("sampling", "order")),
+    QuerySpec("pq_codes", q_pq_codes, _pq_codes_oracle(), ("similarity", "quantization", "iterative")),
+    QuerySpec("pq_ann_topk", q_pq_ann_topk, _pq_ann_oracle(), ("similarity", "quantization", "approx")),
+    # SQ8 scalar quantization — the byte-per-dimension compression
+    # completing the quantization family (flat PQ, IVF-PQ, SQ8)
+    QuerySpec("sq8_ann_topk", q_sq8_ann_topk, _ORACLE_SQ8_ANN, ("similarity", "quantization", "approx")),
+    # the IVF-PQ compressed-index probe and its rerank / profiling reads
+    QuerySpec("ivfpq_topk", q_ivfpq_topk, _ivfpq_oracle(), ("similarity", "quantization", "index")),
+    QuerySpec("ivfpq_rerank_topk", q_ivfpq_rerank_topk, _ivfpq_rerank_oracle(k=10, shortlist=_IVFPQ_SHORTLIST), ("similarity", "quantization", "index")),
+    QuerySpec("pq_distortion", q_pq_distortion, _pq_distortion_oracle(), ("quantization", "profiling")),
+    QuerySpec("ivfpq_cell_stats", q_ivfpq_cell_stats, _ivfpq_cell_stats_oracle(), ("quantization", "profiling", "index")),
+    QuerySpec("dup_cluster_sizes", q_dup_cluster_sizes, _ORACLE_DUP_CLUSTER_SIZES, ("dedup", "profiling", "iterative")),
 ]:
     register(spec)

@@ -2359,7 +2359,7 @@ def q_active_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     # activity frame between the two paths — r16 also skipping the
     # exact operator's redundant re-distinct entirely — saves an
     # event-log scan and ~40% of shuffle bytes, but paired cold
-    # adjudication (bench_isolated, 4 alternating reps, local[32])
+    # adjudication (isolated sessions, 4 alternating reps, local[32])
     # measured it 1.35× slower in r15 and STILL 1.48× slower in r16
     # (5.43 → 8.02 s): at bench scale the cache materialization stages
     # and the single-partition cached reads cost more than the saved
@@ -2492,103 +2492,71 @@ WHERE rk <= {_SIM_USERS_K}
 
 
 for spec in [
-    QuerySpec("pricing_summary", q_pricing_summary, _ORACLE_PRICING, ("agg", "A6", "A8"), bench=True, priority=80),
-    QuerySpec("visitor_stats", q_visitor_stats, _ORACLE_VISITOR, ("agg", "window", "A1"), bench=True, priority=80),
-    QuerySpec("province_stats", q_province_stats, _ORACLE_PROVINCE, ("agg", "join", "A3", "J3"), bench=True, priority=80),
-    QuerySpec("keyword_stats", q_keyword_stats, _ORACLE_KEYWORD, ("udtf", "U1", "J5", "A4"), bench=True, priority=80),
-    # r13: keyword_c2r (5 driver greens, last r12) yielded its window
-    # slot to the new minhash_spanning registration
-    QuerySpec("keyword_c2r", q_keyword_c2r, _ORACLE_C2R, ("udtf", "U2"), priority=80),
-    # r10: the last reference job to get a composed app-level mirror
-    # (verdict r9 item 3) — new spec, must land in the window
-    QuerySpec(
-        "keyword_stats_4product",
-        q_keyword_stats_4product,
-        _ORACLE_KEYWORD_4PRODUCT,
-        ("udtf", "U1", "U2", "J5", "app"),
-        priority=80,
-    ),
-    QuerySpec("order_wide", q_order_wide, _ORACLE_ORDER_WIDE, ("join", "J1"), bench=True, priority=80),
-    QuerySpec("payment_wide", q_payment_wide, _ORACLE_PAYMENT_WIDE, ("join", "J2"), priority=80),
-    QuerySpec("order_wide_enriched", q_order_wide_enriched, _ORACLE_ENRICHED, ("join", "J3"), bench=True, priority=80),
-    QuerySpec("ads_report", q_ads_report, _ORACLE_ADS, ("agg", "A6"), priority=80),
-    QuerySpec("shipping_priority", q_shipping_priority, _ORACLE_SHIP_PRIO, ("join", "J4", "A6", "W2", "W3"), bench=True, priority=80),
-    QuerySpec("supplier_volume", q_supplier_volume, _ORACLE_SUPPLIER_VOLUME, ("join", "J4", "A6"), bench=True, priority=80),
-    QuerySpec("top_k_products", q_top_k_products, _ORACLE_TOPK, ("window_fn", "W1", "W3"), priority=80),
-    QuerySpec("uv_dedup", q_uv_dedup, _ORACLE_UV, ("stateful", "T2"), priority=80),
-    QuerySpec("is_new_correction", q_is_new_correction, _ORACLE_IS_NEW, ("stateful", "T1"), priority=80),
-    QuerySpec("bounce_detection", q_bounce_detection, _ORACLE_BOUNCE, ("stateful", "T3"), priority=80),
-    QuerySpec("cdc_routing", q_cdc_routing, _ORACLE_ROUTING, ("routing", "R2"), priority=40),
-    QuerySpec("log_split", q_log_split, _ORACLE_SPLIT, ("routing", "R1"), priority=80),
-    QuerySpec("union_stats", q_union_stats, _ORACLE_UNION, ("routing", "R3"), priority=80),
-    QuerySpec("scalar_datetime", q_scalar_datetime, _ORACLE_SCALAR_DT, ("scalar", "F4", "F5", "F6", "F7", "F8"), priority=80),
-    QuerySpec("json_props", q_json_props, _ORACLE_JSON, ("projection", "P1", "P6", "F13"), priority=80),
-    QuerySpec("product_stats", q_product_stats, _ORACLE_PRODUCT_STATS, ("agg", "A2", "R3"), bench=True, priority=80),
-    QuerySpec("business_rules", q_business_rules, _ORACLE_BIZ, ("scalar", "F9", "F10", "F11"), priority=40),
-    QuerySpec("session_stats", q_session_stats, _ORACLE_SESSION, ("agg", "window", "T3", "T5"), priority=80),
-    QuerySpec("sliding_stats", q_sliding_stats, _ORACLE_SLIDING, ("agg", "window", "T5"), priority=80),
-    QuerySpec("sales_rollup", q_sales_rollup, _ORACLE_ROLLUP, ("agg", "A7"), priority=80),
-    QuerySpec("sales_cube", q_sales_cube, _ORACLE_CUBE, ("agg", "A7"), priority=80),
-    QuerySpec("sales_grouping_sets", q_sales_grouping_sets, _ORACLE_GROUPING_SETS, ("agg", "A7", "sql"), priority=80),
-    QuerySpec("customer_quartiles", q_customer_quartiles, _ORACLE_QUARTILES, ("window_fn", "W1"), priority=80),
-    QuerySpec("customer_max_order", q_customer_max_order, _ORACLE_CUSTOMER_MAX, ("sql", "subquery"), priority=80),
-    QuerySpec("customer_activity", q_customer_activity, _ORACLE_ACTIVITY, ("setop", "R4"), priority=80),
-    # r13: purchase_attribution (4 driver greens, last r12) yielded its
-    # window slot to the new minhash_recall registration
-    QuerySpec("purchase_attribution", q_purchase_attribution, _ORACLE_ASOF, ("join", "asof"), bench=True, priority=80),
-    QuerySpec("dim_history", q_dim_history, _ORACLE_SCD2, ("scd", "window_fn"), priority=80),
-    QuerySpec("dim_history_merge", q_dim_history_merge, _ORACLE_SCD2, ("scd", "incremental"), priority=80),
-    QuerySpec("nation_trade", q_nation_trade, _ORACLE_NATION_TRADE, ("join", "agg", "J4", "A6"), bench=True, priority=80),
-    QuerySpec("integrity_audit", q_integrity_audit, _ORACLE_INTEGRITY, ("audit", "setop"), priority=80),
-    # r9 rotation: the four specs pulled back at p40 in r8 got their
-    # second green (r04 + r08) and yield their slots — priority=80,
-    # still oracle-verified every CI run — to the r9 first-timers
-    # (ivfpq_rerank_topk, pq_distortion, ivfpq_cell_stats,
-    # dup_cluster_sizes).
-    QuerySpec("value_histogram", q_value_histogram, _ORACLE_HISTOGRAM, ("profiling", "agg"), priority=80),
-    QuerySpec("event_pivot", q_event_pivot, _ORACLE_PIVOT, ("agg", "pivot", "U2"), priority=80),
-    QuerySpec("order_priority", q_order_priority, _ORACLE_ORDER_PRIORITY, ("join", "J6", "semi"), priority=80),
-    QuerySpec("province_stats_approx", q_province_stats_approx, _ORACLE_PROVINCE_APPROX, ("agg", "approx", "A3"), bench=True, priority=80),
-    QuerySpec("province_stats_sql", q_province_stats_sql, _ORACLE_PROVINCE, ("agg", "sql", "A3"), priority=80),
-    QuerySpec("rolling_revenue", q_rolling_revenue, _ORACLE_ROLLING, ("window_fn", "W1"), bench=True, priority=80),
-    # round-5 third batch (behavior analytics): four multi-round greens
-    # (is_new_correction, bounce_detection, cdc_routing, doc_keywords)
-    # yielded window slots so these verify on their first round.
-    QuerySpec("event_funnel", q_event_funnel, _ORACLE_FUNNEL, ("behavior", "window_fn", "T3"), priority=80),
-    QuerySpec("cohort_retention", q_cohort_retention, _ORACLE_COHORT, ("behavior", "agg"), priority=80),
-    # round-5 fifth batch (Markov transitions + hypertable rollup);
-    # slots yielded by the four textops-side demotions (see textops.py)
-    QuerySpec("event_transitions", q_event_transitions, _ORACLE_TRANSITIONS, ("behavior", "window_fn", "agg"), priority=80),
-    QuerySpec("events_rollup", q_events_rollup, _ORACLE_EVENTS_ROLLUP, ("agg", "timeseries"), priority=40),
-    # round-5 sixth batch (sessionization; keyword_stats — green r1-r4
-    # — yields its slot on the textops side alongside order_wide)
-    QuerySpec("user_sessions", q_user_sessions, _ORACLE_USER_SESSIONS, ("behavior", "window_fn", "T3"), priority=80),
-    # round-5 seventh batch (single-table DQ suite; visitor_stats +
-    # province_stats — green r1-r4 — yield their slots)
-    QuerySpec("dq_orders", q_dq_orders, _ORACLE_DQ_ORDERS, ("audit", "agg"), priority=80),
-    QuerySpec("key_skew", q_key_skew, _ORACLE_KEY_SKEW, ("audit", "scale"), priority=80),
-    # round-8: the mitigation key_skew diagnoses for (r7 verdict item 3)
-    QuerySpec("salted_enrichment", q_salted_enrichment, _ORACLE_SALTED_ENRICHMENT, ("join", "scale", "skew"), priority=80),
-    # round-5 eighth batch (SCD-2 consumption side; pricing_summary —
-    # green r1-r4 — yields its slot)
-    # (thrice-green r5-r7; yielded its slot in r8's second batch —
-    # dim_history / dim_history_merge keep the SCD family in-window)
-    QuerySpec("point_in_time_join", q_point_in_time, _ORACLE_POINT_IN_TIME, ("join", "scd", "temporal"), priority=80),
-    # round-5 tenth batch (statistical outliers; ngram_jaccard — green
-    # r1-r4, unchanged — yields its slot so the re-shaped
-    # embedding_dedup keeps its place)
-    QuerySpec("event_anomalies", q_event_anomalies, _ORACLE_EVENT_ANOMALIES, ("audit", "agg", "stats"), priority=40),
-    # round-5 twelfth batch (cascade path driver-verified; sales_cube
-    # — green r4 — yields its slot)
-    QuerySpec("events_rollup_daily", q_events_rollup_daily, _ORACLE_EVENTS_ROLLUP_DAILY, ("agg", "timeseries", "incremental"), priority=40),
-    # (customer_max_order — green r4 — yields its slot)
-    # (thrice-green r5-r7; yielded its slot in r8's second batch — the
-    # HLL audit, which hash-checks the exact columns too, keeps the
-    # family in-window)
-    QuerySpec("active_users", q_active_users, _ORACLE_ACTIVE_USERS, ("behavior", "agg", "distinct"), priority=80),
-    # r14: behavioral time-series similarity search — new spec, must
-    # land in the window (doc_embedding, five greens, yielded)
-    QuerySpec("similar_users", q_similar_users, _ORACLE_SIMILAR_USERS, ("behavior", "similarity"), priority=40),
-    QuerySpec("active_users_hll", q_active_users_hll, _ORACLE_ACTIVE_USERS_HLL, ("behavior", "agg", "approx"), bench=True, priority=40),
+    QuerySpec("pricing_summary", q_pricing_summary, _ORACLE_PRICING, ("agg", "A6", "A8")),
+    QuerySpec("visitor_stats", q_visitor_stats, _ORACLE_VISITOR, ("agg", "window", "A1")),
+    QuerySpec("province_stats", q_province_stats, _ORACLE_PROVINCE, ("agg", "join", "A3", "J3")),
+    QuerySpec("keyword_stats", q_keyword_stats, _ORACLE_KEYWORD, ("udtf", "U1", "J5", "A4")),
+    QuerySpec("keyword_c2r", q_keyword_c2r, _ORACLE_C2R, ("udtf", "U2")),
+    # the reference keyword job as one composed app-level mirror
+    QuerySpec("keyword_stats_4product", q_keyword_stats_4product, _ORACLE_KEYWORD_4PRODUCT, ("udtf", "U1", "U2", "J5", "app")),
+    QuerySpec("order_wide", q_order_wide, _ORACLE_ORDER_WIDE, ("join", "J1")),
+    QuerySpec("payment_wide", q_payment_wide, _ORACLE_PAYMENT_WIDE, ("join", "J2")),
+    QuerySpec("order_wide_enriched", q_order_wide_enriched, _ORACLE_ENRICHED, ("join", "J3")),
+    QuerySpec("ads_report", q_ads_report, _ORACLE_ADS, ("agg", "A6")),
+    QuerySpec("shipping_priority", q_shipping_priority, _ORACLE_SHIP_PRIO, ("join", "J4", "A6", "W2", "W3")),
+    QuerySpec("supplier_volume", q_supplier_volume, _ORACLE_SUPPLIER_VOLUME, ("join", "J4", "A6")),
+    QuerySpec("top_k_products", q_top_k_products, _ORACLE_TOPK, ("window_fn", "W1", "W3")),
+    QuerySpec("uv_dedup", q_uv_dedup, _ORACLE_UV, ("stateful", "T2")),
+    QuerySpec("is_new_correction", q_is_new_correction, _ORACLE_IS_NEW, ("stateful", "T1")),
+    QuerySpec("bounce_detection", q_bounce_detection, _ORACLE_BOUNCE, ("stateful", "T3")),
+    QuerySpec("cdc_routing", q_cdc_routing, _ORACLE_ROUTING, ("routing", "R2")),
+    QuerySpec("log_split", q_log_split, _ORACLE_SPLIT, ("routing", "R1")),
+    QuerySpec("union_stats", q_union_stats, _ORACLE_UNION, ("routing", "R3")),
+    QuerySpec("scalar_datetime", q_scalar_datetime, _ORACLE_SCALAR_DT, ("scalar", "F4", "F5", "F6", "F7", "F8")),
+    QuerySpec("json_props", q_json_props, _ORACLE_JSON, ("projection", "P1", "P6", "F13")),
+    QuerySpec("product_stats", q_product_stats, _ORACLE_PRODUCT_STATS, ("agg", "A2", "R3")),
+    QuerySpec("business_rules", q_business_rules, _ORACLE_BIZ, ("scalar", "F9", "F10", "F11")),
+    QuerySpec("session_stats", q_session_stats, _ORACLE_SESSION, ("agg", "window", "T3", "T5")),
+    QuerySpec("sliding_stats", q_sliding_stats, _ORACLE_SLIDING, ("agg", "window", "T5")),
+    QuerySpec("sales_rollup", q_sales_rollup, _ORACLE_ROLLUP, ("agg", "A7")),
+    QuerySpec("sales_cube", q_sales_cube, _ORACLE_CUBE, ("agg", "A7")),
+    QuerySpec("sales_grouping_sets", q_sales_grouping_sets, _ORACLE_GROUPING_SETS, ("agg", "A7", "sql")),
+    QuerySpec("customer_quartiles", q_customer_quartiles, _ORACLE_QUARTILES, ("window_fn", "W1")),
+    QuerySpec("customer_max_order", q_customer_max_order, _ORACLE_CUSTOMER_MAX, ("sql", "subquery")),
+    QuerySpec("customer_activity", q_customer_activity, _ORACLE_ACTIVITY, ("setop", "R4")),
+    QuerySpec("purchase_attribution", q_purchase_attribution, _ORACLE_ASOF, ("join", "asof")),
+    QuerySpec("dim_history", q_dim_history, _ORACLE_SCD2, ("scd", "window_fn")),
+    QuerySpec("dim_history_merge", q_dim_history_merge, _ORACLE_SCD2, ("scd", "incremental")),
+    QuerySpec("nation_trade", q_nation_trade, _ORACLE_NATION_TRADE, ("join", "agg", "J4", "A6")),
+    QuerySpec("integrity_audit", q_integrity_audit, _ORACLE_INTEGRITY, ("audit", "setop")),
+    QuerySpec("value_histogram", q_value_histogram, _ORACLE_HISTOGRAM, ("profiling", "agg")),
+    QuerySpec("event_pivot", q_event_pivot, _ORACLE_PIVOT, ("agg", "pivot", "U2")),
+    QuerySpec("order_priority", q_order_priority, _ORACLE_ORDER_PRIORITY, ("join", "J6", "semi")),
+    QuerySpec("province_stats_approx", q_province_stats_approx, _ORACLE_PROVINCE_APPROX, ("agg", "approx", "A3")),
+    QuerySpec("province_stats_sql", q_province_stats_sql, _ORACLE_PROVINCE, ("agg", "sql", "A3")),
+    QuerySpec("rolling_revenue", q_rolling_revenue, _ORACLE_ROLLING, ("window_fn", "W1")),
+    # behavior analytics
+    QuerySpec("event_funnel", q_event_funnel, _ORACLE_FUNNEL, ("behavior", "window_fn", "T3")),
+    QuerySpec("cohort_retention", q_cohort_retention, _ORACLE_COHORT, ("behavior", "agg")),
+    # Markov transitions + hypertable rollup
+    QuerySpec("event_transitions", q_event_transitions, _ORACLE_TRANSITIONS, ("behavior", "window_fn", "agg")),
+    QuerySpec("events_rollup", q_events_rollup, _ORACLE_EVENTS_ROLLUP, ("agg", "timeseries")),
+    # sessionization
+    QuerySpec("user_sessions", q_user_sessions, _ORACLE_USER_SESSIONS, ("behavior", "window_fn", "T3")),
+    # single-table data-quality suite
+    QuerySpec("dq_orders", q_dq_orders, _ORACLE_DQ_ORDERS, ("audit", "agg")),
+    QuerySpec("key_skew", q_key_skew, _ORACLE_KEY_SKEW, ("audit", "scale")),
+    # the mitigation key_skew diagnoses for
+    QuerySpec("salted_enrichment", q_salted_enrichment, _ORACLE_SALTED_ENRICHMENT, ("join", "scale", "skew")),
+    # SCD-2 consumption side
+    QuerySpec("point_in_time_join", q_point_in_time, _ORACLE_POINT_IN_TIME, ("join", "scd", "temporal")),
+    # statistical outliers
+    QuerySpec("event_anomalies", q_event_anomalies, _ORACLE_EVENT_ANOMALIES, ("audit", "agg", "stats")),
+    # the incremental rollup cascade path
+    QuerySpec("events_rollup_daily", q_events_rollup_daily, _ORACLE_EVENTS_ROLLUP_DAILY, ("agg", "timeseries", "incremental")),
+    QuerySpec("active_users", q_active_users, _ORACLE_ACTIVE_USERS, ("behavior", "agg", "distinct")),
+    # behavioral time-series similarity search
+    QuerySpec("similar_users", q_similar_users, _ORACLE_SIMILAR_USERS, ("behavior", "similarity")),
+    QuerySpec("active_users_hll", q_active_users_hll, _ORACLE_ACTIVE_USERS_HLL, ("behavior", "agg", "approx")),
 ]:
     register(spec)

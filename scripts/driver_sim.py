@@ -37,7 +37,7 @@ print(f"entry(): {n} rows, schema={[f.name for f in edf.schema.fields]}", flush=
 duck = duckdb.connect()
 for t in TABLES:
     p = f"{SF_DIR}/{t}.parquet"
-    # Spark-written replicas (scripts/scale_probe.py) are parquet
+    # Spark-written table replicas are parquet
     # DIRECTORIES; DuckDB needs the file glob, not the dir path
     src = f"{p}/*.parquet" if os.path.isdir(p) else p
     duck.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
@@ -50,8 +50,7 @@ if only:
     if unknown:
         raise SystemExit(f"SIM_ONLY names not in queries(): {sorted(unknown)}")
     queries = {n: f for n, f in queries.items() if n in only}
-print(f"{len(queries)} queries, {len(oracles)} oracles; window[:50] all-oracle="
-      f"{all(name in oracles for name in list(queries)[:50])}", flush=True)
+print(f"{len(queries)} queries, {len(oracles)} oracles", flush=True)
 
 failed = []
 for name, fn in queries.items():

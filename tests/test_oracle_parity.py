@@ -15,10 +15,10 @@ _ensure_loaded()
 ORACLE_SPECS = [s for s in REGISTRY.values() if s.oracle is not None]
 ROWS_ONLY_SPECS = [s for s in REGISTRY.values() if s.oracle is None]
 
-# Fast-tier smoke subset (r10 verdict item 6): one cheap representative
-# per operator family stays in the <5 min inner loop; the FULL
-# parametrization runs in the slow tier (and once per round). Keep
-# newly-registered specs here until their first driver green.
+# Fast-tier smoke subset: one cheap representative per operator family
+# stays in the <5 min inner loop; the FULL parametrization runs in the
+# slow tier (`pytest -m slow`). A spec that opens a new operator family
+# adds its cheapest member here.
 FAST_PARITY = {
     "dedup_exact", "text_quality", "token_stats", "language_id",  # text/dedup
     "ngram_jaccard", "ann_cosine_topk",  # pair/similarity
@@ -26,8 +26,7 @@ FAST_PARITY = {
     "pricing_summary", "keyword_stats", "order_wide", "product_stats",  # warehouse
     "union_stats", "sales_rollup", "scalar_datetime", "json_props",  # routing/scalar
     "event_anomalies",  # zscore portable-conversion path
-    # r11 additions, pre-first-driver-green
-    "dsir_importance", "dup_source_matrix", "ngram_novelty",
+    "dsir_importance", "dup_source_matrix", "ngram_novelty",  # corpus profiling
 }
 
 
@@ -171,3 +170,13 @@ def test_every_spec_is_oracle_backed():
     3). A future genuinely-non-SQL-expressible registration should
     reinstate that execution check alongside relaxing this assertion."""
     assert ROWS_ONLY_SPECS == [], [s.name for s in ROWS_ONLY_SPECS]
+
+
+def test_entry_contract_lists_specs_in_registration_order():
+    """The driver contract is the registry itself: ``queries()`` and
+    ``oracle_sql()`` list every spec once, in registration order, with no
+    reordering between the registry and ``__spark_entry__``."""
+    import __spark_entry__
+
+    assert list(__spark_entry__.queries()) == list(REGISTRY)
+    assert list(__spark_entry__.oracle_sql()) == list(REGISTRY)
