@@ -8,7 +8,14 @@ now; Kafka/JDBC in streaming deploys) is swapped in one place.
 Scan hygiene: we return raw ``spark.read.parquet`` DataFrames and let
 each query project/filter — Catalyst pushes the predicates and prunes
 columns down to the parquet scan (verify with
-``df.explain("formatted")`` → PushedFilters / ReadSchema).
+``df.explain("formatted")`` → PushedFilters / ReadSchema). The schema
+is resolved once per session and file version (``_version``): inferring
+it runs a one-task Spark job that reads a footer, ~85 ms per call,
+while a read with the known schema starts none. Every call still
+returns a fresh ``spark.read.schema(s).parquet(path)`` relation, never
+a cached DataFrame, so self-joins and temp views get fresh attribute
+ids, directory listings stay live and persisted plans over the table
+still match in the ``CacheManager``.
 """
 
 from __future__ import annotations
@@ -16,12 +23,31 @@ from __future__ import annotations
 import functools
 import json
 import os
+import weakref
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 from rt_bigdata_spark.config import TESTDATA_TABLES
+
+
+def _version(path: str) -> tuple:
+    """What a footer or schema read from ``path`` stays valid for: a
+    file's (mtime_ns, size); a directory dataset's listing of
+    (relative path, mtime_ns, size). Rewriting a file in place, or
+    adding or replacing a part file, changes it, so every cache keyed
+    on it here serves fresh schema info for regenerated data."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_mtime_ns, st.st_size)
+    listing = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for f in sorted(files):
+            st = os.stat(os.path.join(root, f))
+            listing.append((os.path.relpath(os.path.join(root, f), path), st.st_mtime_ns, st.st_size))
+    return tuple(listing)
 
 
 def _nanos_ts_cols(path: str) -> tuple[str, ...]:
@@ -31,26 +57,25 @@ def _nanos_ts_cols(path: str) -> tuple[str, ...]:
     rounds, micros now), and a hard-coded column list silently
     surfaces any new nanos column as a raw long. Footer metadata is
     the source of truth both engines read anyway; one footer fetch per
-    (footer file, mtime) is cached — the mtime key means regenerating
-    testdata at the same path within one process serves fresh schema
-    info, not a stale cache entry.
+    (path, ``_version``) is cached.
 
     For a directory-shaped dataset the first part file's footer stands
     in for all of them (a writer that mixes timestamp units across
     parts would already be unreadable as one table).
     """
-    if os.path.isdir(path):
-        parts = sorted(
-            e for e in os.listdir(path) if e.endswith(".parquet") and not e.startswith((".", "_"))
-        )
-        if not parts:
-            return ()
-        path = os.path.join(path, parts[0])
-    return _nanos_ts_cols_of_file(path, os.path.getmtime(path))
+    return _nanos_ts_cols_at(path, _version(path))
 
 
 @functools.lru_cache(maxsize=512)
-def _nanos_ts_cols_of_file(path: str, mtime: float) -> tuple[str, ...]:
+def _nanos_ts_cols_at(path: str, version: tuple) -> tuple[str, ...]:
+    if os.path.isdir(path):
+        parts = [
+            rel for rel, _, _ in version
+            if rel.endswith(".parquet") and not os.path.basename(rel).startswith((".", "_"))
+        ]
+        if not parts:
+            return ()
+        path = os.path.join(path, parts[0])
     import pyarrow.parquet as pq
 
     schema = pq.ParquetFile(path).schema
@@ -96,9 +121,29 @@ def _convert_nanos_col(df: DataFrame, dotted: str) -> DataFrame:
     return df.withColumn(parts[0], col)
 
 
+# Per session: path -> ((version, nanosAsLong), inferred schema). One
+# entry per path, so a rewritten file replaces its stale entry.
+_SCHEMAS: weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[tuple, StructType]]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _schema(spark: SparkSession, path: str, version: tuple) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    session, path, file version and ``nanosAsLong`` value (the one
+    schema-shaping conf the engine sets at runtime, in ``load_table``)."""
+    key = (version, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+    per_session = _SCHEMAS.setdefault(spark, {})
+    hit = per_session.get(path)
+    if hit is None or hit[0] != key:
+        hit = per_session[path] = (key, spark.read.parquet(path).schema)
+    return hit[1]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
-    nanos = _nanos_ts_cols(path)
+    version = _version(path)
+    nanos = _nanos_ts_cols_at(path, version)
     if nanos and spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
         # Without this conf any session (e.g. the correctness driver's
         # externally-built one) fails with PARQUET_TYPE_ILLEGAL on a
@@ -107,7 +152,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # needed, and only once (the conf.get guard avoids re-mutating
         # shared session state on every call).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = spark.read.schema(_schema(spark, path, version)).parquet(path)
     for col in nanos:
         # Convert only when the field actually read back as long
         # (nanosAsLong in effect); see _convert_nanos_col for the
@@ -118,8 +163,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _leaf_is_long(schema, parts: list[str]) -> bool:
-    from pyspark.sql.types import StructType
-
     dt: object = schema
     for p in parts:
         if not isinstance(dt, StructType) or p not in dt.fieldNames():

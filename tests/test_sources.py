@@ -1,6 +1,7 @@
 """load_table source hygiene: TIMESTAMP(NANOS) columns are detected
 from the parquet footer (not an allowlist) and surfaced as proper
-timestamps; micros columns pass through untouched."""
+timestamps; micros columns pass through untouched. Schemas are inferred
+once per file version, yet every load is a fresh, live relation."""
 
 from __future__ import annotations
 
@@ -104,6 +105,58 @@ def test_pre_epoch_nanos_floor_not_truncate(spark, tmp_path):
     rows = {r.k: r.t for r in df.collect()}
     assert rows[1] == dt.datetime(1969, 12, 31, 23, 59, 59, 999998)
     assert rows[2] == dt.datetime(1970, 1, 1, 0, 0, 0, 1)
+
+
+def test_rewritten_file_reads_back_with_its_new_schema(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": [1, 2], "a": ["x", "y"]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["k", "a"]
+
+    pq.write_table(pa.table({"k": [3], "b": [1.5], "c": [True]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["k", "b", "c"]
+    assert [tuple(r) for r in df.collect()] == [(3, 1.5, True)]
+
+
+def test_part_file_added_to_directory_dataset_is_visible(spark, tmp_path):
+    d = tmp_path / "parts.parquet"
+    d.mkdir()
+    pq.write_table(pa.table({"k": [1, 2]}), str(d / "part-000.parquet"))
+    assert load_table(spark, str(tmp_path), "parts").count() == 2
+
+    pq.write_table(pa.table({"k": [3, 4]}), str(d / "part-001.parquet"))
+    got = load_table(spark, str(tmp_path), "parts")
+    assert sorted(r.k for r in got.collect()) == [1, 2, 3, 4]
+
+
+def test_two_loads_of_one_table_self_join(spark, tmp_path):
+    """Each call returns a fresh relation: two loads carry distinct
+    attribute ids, so a self-join resolves each side's columns."""
+    pq.write_table(pa.table({"k": [1, 2, 3], "v": ["a", "b", "c"]}), str(tmp_path / "s.parquet"))
+    a = load_table(spark, str(tmp_path), "s")
+    b = load_table(spark, str(tmp_path), "s")
+    pairs = a.join(b, a["k"] + 1 == b["k"]).select(a["v"], b["v"].alias("next_v"))
+    assert sorted(tuple(r) for r in pairs.collect()) == [("a", "b"), ("b", "c")]
+
+
+def test_repeated_load_of_unchanged_file_starts_no_job(spark, tmp_path):
+    """Schema inference is a Spark job; a warm session resolves an
+    unchanged file's schema once and later loads start none."""
+    import uuid
+
+    _write_tbl(str(tmp_path / "j.parquet"), "ns")
+    sc = spark.sparkContext
+    first, second = (f"load-table-{uuid.uuid4().hex}" for _ in range(2))
+    try:
+        sc.setJobGroup(first, first)
+        load_table(spark, str(tmp_path), "j")
+        sc.setJobGroup(second, second)
+        df = load_table(spark, str(tmp_path), "j")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(first)) >= 1
+    assert sc.statusTracker().getJobIdsForGroup(second) == []
+    assert isinstance(df.schema["created_at"].dataType, TimestampType)
 
 
 def test_read_jsonl_permissive_splits_clean_and_corrupt(spark, tmp_path):
