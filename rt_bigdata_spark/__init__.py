@@ -10,11 +10,12 @@ ODS→DWD→DWM→DWS pipeline) as an idiomatic Spark engine:
 - declarative DataFrame/SQL plans so Catalyst handles pushdown,
   pruning, join strategy and partial aggregation,
 - stateful streaming semantics (visitor correction, UV dedup, bounce
-  detection, funnel progression) on BOTH state engines:
-  ``applyInPandasWithState`` (streaming/stateful.py) and Spark 4's
-  transformWithState (streaming/stateful_v2.py — native TTL, named
-  event-time timers), sharing per-key scan kernels so the engines
-  cannot drift,
+  detection, funnel progression): daily-UV dedup is Structured
+  Streaming's native ``dropDuplicates``, the others run on BOTH state
+  engines, ``applyInPandasWithState`` (streaming/stateful.py) and
+  Spark 4's transformWithState (streaming/stateful_v2.py — native TTL,
+  named event-time timers), sharing per-key scan kernels so the
+  engines cannot drift,
 - large-scale training-data ops (dedup, similarity search, text
   analysis, multimodal plumbing) on the same DataFrame substrate.
 """

@@ -118,10 +118,13 @@ def ods_base_db_app(
 
 def unique_visit_app(page: DataFrame, streaming: bool = True, ttl: bool = False) -> DataFrame:
     """UniqueVisitApp: daily first-visit-per-mid filter (T2) over the
-    flat page branch. Streaming = keyed state (+ optional 1-day TTL
-    like the reference's StateTtlConfig); batch = the equivalent
+    flat page branch. Streaming = native ``dropDuplicates`` on
+    (mid, dt) over session entries, no Python worker (``ttl=True``
+    adds the reference's 1-day state bound, see
+    ``streaming.stateful.unique_visits``); batch = the equivalent
     window analytic (first event per (mid, day) among session
-    entries)."""
+    entries). Both emit every (mid, day) with an entry, whatever the
+    arrival order of the days."""
     if streaming:
         from rt_bigdata_spark.streaming.stateful import unique_visits
 

@@ -1,25 +1,29 @@
 """Stateful streaming operators (SURVEY.md §2.7, T1-T3).
 
-The reference implements these with Flink keyed ValueState / CEP;
-Spark-native they are ``applyInPandasWithState`` over ``groupBy(mid)``
-— Arrow-batched per-group logic with an explicit state object and
-event-time timeouts. Each operator also works on batch DataFrames via
-``applyInPandas`` (no state carries across calls, the whole group is
-one batch) so semantics are testable without a streaming harness.
+The reference implements these with Flink keyed ValueState / CEP.
+Spark-native, T2 is Structured Streaming's own deduplication operator
+(``dropDuplicates`` with a state store, no Python boundary); T1 and T3
+need per-key logic and are ``applyInPandasWithState`` over
+``groupBy(mid)`` — Arrow-batched per-group logic with an explicit state
+object and event-time timeouts. Each operator also works on batch
+DataFrames (``applyInPandas`` for T3: no state carries across calls,
+the whole group is one batch) so semantics are testable without a
+streaming harness.
 
 - T1 new-visitor correction (rt-flink …/app/dwd/OdsBaseLogApp.scala:86-135):
   per-mid first-visit date; a claimed ``is_new=1`` on a later date is
   rewritten to 0.
-- T2 daily UV dedup (…/app/dwm/UniqueVisitApp.scala:74-116): per-mid
-  keep only the first event per day; entry-page pre-filter; state TTL
-  1 day ≈ keeping only the latest date in state.
+- T2 daily UV dedup (…/app/dwm/UniqueVisitApp.scala:74-116): keep
+  only the first entry event per (mid, day) via native
+  ``dropDuplicates``; the reference's 1-day state TTL becomes a 1-day
+  event-time window in the dedup keys, evicted behind the watermark.
 - T3 bounce detection (…/app/dwm/UserJumpDetailApp.scala:93-140): CEP
   ``begin(entry).next(any).within(10 s)`` where the TIMED-OUT partial
   match is the output: an entry page with no follow-up within 10 s is
   a bounce.
 
-Scale notes: state is per-mid and O(bytes); the shuffle is the
-unavoidable keyBy. With RocksDB state store
+Scale notes: state is per-mid (per (mid, day) for T2) and O(bytes);
+the shuffle is the unavoidable keyBy. With RocksDB state store
 (``spark.sql.streaming.stateStore.providerClass``) state spills to
 disk exactly like the reference's RocksDB backend.
 """
@@ -30,6 +34,7 @@ from collections.abc import Iterable, Iterator
 from typing import Any
 
 import pandas as pd
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -99,11 +104,14 @@ def _prune_for_state(events: DataFrame, cols: "tuple[str, ...]") -> DataFrame:
     unchanged: the kernels read only these fields, and the output
     schema is fixed by outputStructType either way."""
     keep = list(cols)
-    keep += [
-        f.name for f in events.schema.fields
-        if "spark.watermarkDelayMs" in f.metadata and f.name not in keep
-    ]
+    keep += [name for name in _watermark_columns(events) if name not in keep]
     return events.select(*keep)
+
+
+def _watermark_columns(events: DataFrame) -> list[str]:
+    """Names of the columns ``withWatermark`` tagged with
+    ``spark.watermarkDelayMs`` metadata."""
+    return [f.name for f in events.schema.fields if "spark.watermarkDelayMs" in f.metadata]
 
 
 # --- T1 ---------------------------------------------------------------------
@@ -163,75 +171,40 @@ def correct_is_new(events: DataFrame) -> DataFrame:
 # --- T2 ---------------------------------------------------------------------
 
 
-def _uv_scan(pdfs: Iterable[pd.DataFrame], last_date: str | None):
-    """Shared T2 loop: (rows_to_emit, new_last_date, max_ts_seen)."""
-    rows: list[dict[str, Any]] = []
-    max_ts: int | None = None
-    for pdf in pdfs:
-        for r in pdf.sort_values("ts").itertuples(index=False):
-            max_ts = r.ts if max_ts is None else max(max_ts, r.ts)
-            if r.last_page_id is not None and r.last_page_id != "":
-                continue  # not a session entry → can't be first visit of day
-            d = _day(r.ts)
-            if last_date is None or d > last_date:
-                rows.append({"mid": r.mid, "dt": d, "ts": r.ts})
-                last_date = d
-    return rows, last_date, max_ts
-
-
-def _uv_fn(key: tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    """First visit per (mid, day); entry-filter on last_page_id; state
-    holds the last seen date (UniqueVisitApp.scala:87-101)."""
-    (last_date,) = state.get if state.exists else (None,)
-    rows, last_date, _ = _uv_scan(pdfs, last_date)
-    state.update((last_date,))
-    yield pd.DataFrame(rows, columns=[f.name for f in UV_OUT_SCHEMA.fields])
-
-
-def _uv_fn_ttl(key: tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    """T2 with the reference's 1-day state TTL (StateTtlConfig
-    Time.days(1), UniqueVisitApp.scala:87-92): state for a mid idle past
-    a day is dropped by an event-time timeout, bounding total state to
-    mids active in the last day — the property that matters at
-    production mid cardinality. (Like the reference's TTL, expiry is
-    unobservable in outputs — a same-date revisit >24 h later cannot
-    exist — it is purely a state-size bound.)"""
-    if state.hasTimedOut:
-        state.remove()
-        yield pd.DataFrame([], columns=[f.name for f in UV_OUT_SCHEMA.fields])
-        return
-    (last_date,) = state.get if state.exists else (None,)
-    rows, last_date, max_ts = _uv_scan(pdfs, last_date)
-    state.update((last_date,))
-    if max_ts is not None:
-        # never set a timeout at/below the watermark (Spark rejects it)
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(max_ts + _DAY_MS, wm + 1))
-    yield pd.DataFrame(rows, columns=[f.name for f in UV_OUT_SCHEMA.fields])
-
-
 def unique_visits(events: DataFrame, ttl: bool = False) -> DataFrame:
-    """T2 daily-UV dedup. ``ttl=True`` reproduces the reference's 1-day
-    state TTL via event-time timeouts — the input must then carry a
-    watermarked event-time column of any name (e.g.
-    ``withWatermark("eventTime", …)``) in addition to the epoch-ms
-    ``ts``."""
-    events = _prune_for_state(events, ("mid", "ts", "last_page_id"))
+    """T2 daily-UV dedup (UniqueVisitApp.scala:74-116) as Structured
+    Streaming's native deduplication: entry events only (empty
+    ``last_page_id``), then ``dropDuplicates`` on ``(mid, dt)`` with
+    ``dt`` the UTC day of ``ts``. The state store holds one key per
+    ``(mid, dt)``; no Python worker runs. Within a micro-batch the
+    emitted row is the first the operator reads, the reference's
+    arrival-order rule.
+
+    An entry for an earlier day that arrives after a later day's entry
+    is emitted too, as in the batch builder
+    (``apps.unique_visit_app(streaming=False)``); the former keyed-state
+    kernel kept only the latest date per mid and dropped it. A
+    checkpoint written by that ``applyInPandasWithState`` operator
+    cannot be resumed by this plan.
+
+    ``ttl=True`` bounds state to the open days, the role of the
+    reference's 1-day StateTtlConfig: the 1-day ``window`` of the
+    input's watermarked event-time column (any name, e.g.
+    ``withWatermark("eventTime", …)``) joins the dedup keys, so a day's
+    keys leave the state once the watermark passes that day's end, and
+    entries behind the watermark are dropped as late. Raises
+    ``ValueError`` when the input carries no watermarked column."""
+    entries = events.filter(F.col("last_page_id").isNull() | (F.col("last_page_id") == ""))
+    dt = F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd")  # session TZ is UTC, like _day
+    cols = [F.col("mid"), F.col("ts"), dt.alias("dt")]
+    keys = ["mid", "dt"]
     if ttl:
-        return events.groupBy("mid").applyInPandasWithState(
-            _uv_fn_ttl,
-            outputStructType=UV_OUT_SCHEMA,
-            stateStructType="last_date STRING",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    return events.groupBy("mid").applyInPandasWithState(
-        _uv_fn,
-        outputStructType=UV_OUT_SCHEMA,
-        stateStructType="last_date STRING",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+        wm = _watermark_columns(events)
+        if not wm:
+            raise ValueError("unique_visits(ttl=True) needs an input with a watermarked event-time column")
+        cols.append(F.window(wm[0], "1 day").alias("day_window"))
+        keys.append("day_window")
+    return entries.select(*cols).dropDuplicates(keys).select("mid", "dt", "ts")
 
 
 # --- T3 ---------------------------------------------------------------------

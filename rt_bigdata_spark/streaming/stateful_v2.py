@@ -1,15 +1,17 @@
 """T1/T2/T3 stateful operators on Spark 4's transformWithState API.
 
-``stateful.py`` carries the ``applyInPandasWithState`` implementations
-(the Spark 3.4-portable path). These re-express the same reference
+``stateful.py`` carries the v1 implementations: T1/T3 on
+``applyInPandasWithState`` (the Spark 3.4-portable path) and T2 as
+native ``dropDuplicates``. These re-express the same reference
 semantics on the v2 arbitrary-state engine (StatefulProcessor), which
 maps the reference's Flink primitives more directly:
 
 - **native per-state TTL** (``getValueState(..., ttlDurationMs=)``) is
   the literal analog of Flink's ``StateTtlConfig`` 1-day expiry on the
   UV filter (rt-flink …/app/dwm/UniqueVisitApp.scala:87-92 —
-  create-and-write, processing-time), replacing the manual
-  event-time-timeout emulation in ``stateful._uv_fn_ttl``;
+  create-and-write, processing-time), where
+  ``stateful.unique_visits(ttl=True)`` evicts event-time day windows
+  behind the watermark instead;
 - **named registered timers** (``registerTimer`` /
   ``handleExpiredTimer``) replace the single implicit
   ``GroupStateTimeout``, matching Flink CEP's per-pattern timeout timer
@@ -29,7 +31,8 @@ keyBy shuffle, O(bytes) state per key, Arrow-batched Python execution.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
+from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -49,9 +52,9 @@ from rt_bigdata_spark.streaming.stateful import (
     UV_OUT_SCHEMA,
     _DAY_MS,
     _bounce_scan,
+    _day,
     _funnel_scan,
     _is_new_scan,
-    _uv_scan,
 )
 
 _UV_COLS = [f.name for f in UV_OUT_SCHEMA.fields]
@@ -85,6 +88,20 @@ class IsNewProcessor(StatefulProcessor):
         pass
 
 
+def _uv_scan(pdfs: Iterable[pd.DataFrame], last_date: str | None):
+    """T2 loop of ``UniqueVisitProcessor``: (rows_to_emit, new_last_date)."""
+    rows: list[dict[str, Any]] = []
+    for pdf in pdfs:
+        for r in pdf.sort_values("ts").itertuples(index=False):
+            if r.last_page_id is not None and r.last_page_id != "":
+                continue  # not a session entry → can't be first visit of day
+            d = _day(r.ts)
+            if last_date is None or d > last_date:
+                rows.append({"mid": r.mid, "dt": d, "ts": r.ts})
+                last_date = d
+    return rows, last_date
+
+
 class UniqueVisitProcessor(StatefulProcessor):
     """T2 daily-UV dedup; state = last emitted visit date per mid,
     optionally expiring via native TTL after one idle day."""
@@ -101,7 +118,7 @@ class UniqueVisitProcessor(StatefulProcessor):
         self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: TimerValues
     ) -> Iterator[pd.DataFrame]:
         held = self._last_date.get()
-        out, last_date, _ = _uv_scan(rows, held[0] if held is not None else None)
+        out, last_date = _uv_scan(rows, held[0] if held is not None else None)
         if last_date is not None:
             self._last_date.update((last_date,))
         yield pd.DataFrame(out, columns=_UV_COLS)
