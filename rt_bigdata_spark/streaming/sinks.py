@@ -85,7 +85,12 @@ def read_upserted(spark, out_dir: str, keys: Sequence[str], version_col: str = "
 def jdbc_batch_sink(url: str, table: str, keys: Sequence[str], version_col: str = "ts", batchsize: int = 10_000, properties: dict | None = None):
     """S9/S10: ClickHouse/JDBC foreachBatch sink — dedup then batched
     JDBC append (the reference's manual 2-row batching,
-    ClickHouseUtil.scala:49, becomes the connector's ``batchsize``)."""
+    ClickHouseUtil.scala:49, becomes the connector's ``batchsize``).
+    It is the sink of the reference's DWS apps, which end in a
+    ClickHouse JdbcSink (e.g. ProvinceStatsSqlApp.scala:84); here it
+    takes the output of ``apps.visitor_stats_app``,
+    ``apps.product_stats_app``, ``apps.province_stats_app`` and
+    ``apps.keyword_stats_app``."""
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         out = dedup_last_wins(batch_df, keys, version_col)

@@ -1,10 +1,11 @@
 """Stateful streaming operators (SURVEY.md §2.7, T1-T3).
 
 The reference implements these with Flink keyed ValueState / CEP.
-Spark-native, T2 is Structured Streaming's own deduplication operator
-(``dropDuplicates`` with a state store, no Python boundary); T1 and T3
-need per-key logic and are ``applyInPandasWithState`` over
-``groupBy(mid)`` — Arrow-batched per-group logic with an explicit state
+This module is the engine's one stateful streaming engine. Spark-native,
+T2 is Structured Streaming's own deduplication operator
+(``dropDuplicates`` with a state store, no Python boundary); T1, T3 and
+the funnel need per-key logic and are ``applyInPandasWithState`` over
+``groupBy(key)`` — Arrow-batched per-group logic with an explicit state
 object and event-time timeouts. Each operator also works on batch
 DataFrames (``applyInPandas`` for T3: no state carries across calls,
 the whole group is one batch) so semantics are testable without a
@@ -67,14 +68,6 @@ IS_NEW_OUT_SCHEMA = StructType(
     ]
 )
 
-UV_OUT_SCHEMA = StructType(
-    [
-        StructField("mid", StringType()),
-        StructField("dt", StringType()),
-        StructField("ts", LongType()),
-    ]
-)
-
 BOUNCE_OUT_SCHEMA = StructType(
     [
         StructField("mid", StringType()),
@@ -95,14 +88,14 @@ def _prune_for_state(events: DataFrame, cols: "tuple[str, ...]") -> DataFrame:
     any watermarked event-time column (the one ``withWatermark`` tagged
     with ``spark.watermarkDelayMs`` metadata, whatever its name), since
     dropping it would detach the query's watermark/timeout machinery —
-    BEFORE the keyed shuffle and the Arrow boundary (r16, guide
-    §4.1/§2.3): applyInPandasWithState / transformWithStateInPandas ship
-    EVERY column of the grouped frame to the Python worker, and Spark
-    cannot see which fields the function touches, so a wide production
-    log schema would otherwise cross the state-store shuffle and the
+    BEFORE the keyed shuffle and the Arrow boundary:
+    ``applyInPandasWithState`` and ``applyInPandas`` ship EVERY column
+    of the grouped frame to the Python worker, and Spark cannot see
+    which fields the function touches, so a wide production log schema
+    would otherwise cross the state-store shuffle and the
     JVM→Arrow→Python boundary in full on every micro-batch. Semantics
     unchanged: the kernels read only these fields, and the output
-    schema is fixed by outputStructType either way."""
+    schema is fixed by the declared output schema either way."""
     keep = list(cols)
     keep += [name for name in _watermark_columns(events) if name not in keep]
     return events.select(*keep)
@@ -117,15 +110,13 @@ def _watermark_columns(events: DataFrame) -> list[str]:
 # --- T1 ---------------------------------------------------------------------
 
 
-def _is_new_scan(
-    pdfs: Iterable[pd.DataFrame], first_date: str | None
-) -> tuple[list[dict[str, Any]], str | None]:
-    """Shared T1 kernel (rows_to_emit, new_first_date): rewrite
-    is_new=1 → 0 when the mid has an earlier first-visit date
-    (OdsBaseLogApp.scala:90-135). ONE pure function consumed by BOTH
-    engines (``_is_new_fn`` here, ``stateful_v2.IsNewProcessor``) so
-    the reference semantics cannot drift between them (r7 verdict
-    item 8)."""
+def _is_new_fn(
+    key: tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """T1 on applyInPandasWithState. State: first visit date string.
+    Rewrites is_new=1 → 0 when the mid has an earlier first-visit date
+    (OdsBaseLogApp.scala:90-135)."""
+    (first_date,) = state.get if state.exists else (None,)
     rows: list[dict[str, Any]] = []
     for pdf in pdfs:
         for r in pdf.sort_values("ts").itertuples(index=False):
@@ -144,15 +135,6 @@ def _is_new_scan(
             rows.append(
                 {"mid": r.mid, "page_id": r.page_id, "last_page_id": r.last_page_id, "is_new": is_new, "ts": r.ts}
             )
-    return rows, first_date
-
-
-def _is_new_fn(
-    key: tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """T1 on applyInPandasWithState. State: first visit date string."""
-    (first_date,) = state.get if state.exists else (None,)
-    rows, first_date = _is_new_scan(pdfs, first_date)
     state.update((first_date,))
     yield pd.DataFrame(rows, columns=[f.name for f in IS_NEW_OUT_SCHEMA.fields])
 
@@ -214,26 +196,19 @@ def _bounce_scan(
     pdfs: Iterable[pd.DataFrame],
     pending_page: str | None,
     pending_ts: int | None,
-    on_resolved=None,
 ) -> tuple[list[dict[str, Any]], str | None, int | None]:
-    """Shared T3 kernel (rows_to_emit, pending_page, pending_ts): hold
-    each entry event (empty last_page_id); the NEXT event for the mid
+    """T3 kernel (rows_to_emit, pending_page, pending_ts): hold each
+    entry event (empty last_page_id); the NEXT event for the mid
     resolves the held entry — gap > 10 s emits it as a bounce, within
-    10 s discards it (UserJumpDetailApp.scala:93-140). ``on_resolved``
-    fires (with the resolved entry's ts) whenever a held entry is
-    resolved by a successor — the v2 engine uses it to delete that
-    entry's registered timer. ONE pure function consumed by all three
-    callers (``_bounce_fn``, ``detect_bounces_batch``,
-    ``stateful_v2.BounceProcessor``) so the CEP semantics cannot drift
-    between engines (r7 verdict item 8)."""
+    10 s discards it (UserJumpDetailApp.scala:93-140). The streaming
+    path (``_bounce_fn``) and the batch path (``detect_bounces_batch``)
+    both run it, so the two agree on the CEP semantics."""
     rows: list[dict[str, Any]] = []
     for pdf in pdfs:
         for r in pdf.sort_values("ts").itertuples(index=False):
             if pending_ts is not None:
                 if r.ts - pending_ts > BOUNCE_TIMEOUT_MS:
                     rows.append({"mid": r.mid, "page_id": pending_page, "ts": pending_ts})
-                if on_resolved is not None:
-                    on_resolved(pending_ts)
                 pending_page, pending_ts = None, None
             if r.last_page_id is None or r.last_page_id == "":
                 pending_page, pending_ts = r.page_id, r.ts
@@ -340,45 +315,30 @@ def _funnel_fn_factory(steps: tuple[str, ...]):
     click depending on arbitrary tie order. NULL users are dropped,
     mirroring the batch operator.
     """
+    rank = {s: i for i, s in enumerate(steps)}
+
     def fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         stage, reach_ts = (state.get if state.exists else (0, None))
-        rows, stage, reach_ts = _funnel_scan(key[0], pdfs, steps, stage, reach_ts)
+        rows: list[dict[str, Any]] = []
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if chunks:
+            pooled = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+            pooled = pooled.assign(
+                _rk=pooled["event_type"].map(rank).fillna(len(steps)).astype("int64")
+            )
+            for r in pooled.sort_values(["ts", "_rk"], kind="stable").itertuples(index=False):
+                if stage >= len(steps):
+                    break
+                if r.event_type == steps[stage] and (reach_ts is None or r.ts >= reach_ts):
+                    stage += 1
+                    reach_ts = r.ts
+                    rows.append(
+                        {"user_id": key[0], "funnel_stage": stage, "reached_ts": r.ts}
+                    )
         state.update((stage, reach_ts))
         yield pd.DataFrame(rows, columns=[f.name for f in FUNNEL_OUT_SCHEMA.fields])
 
     return fn
-
-
-def _funnel_scan(
-    user_id,
-    pdfs: "Iterable[pd.DataFrame]",
-    steps: tuple[str, ...],
-    stage: int,
-    reach_ts,
-) -> tuple[list[dict], int, "int | None"]:
-    """The ONE funnel-advance kernel shared by the v1
-    (applyInPandasWithState) and v2 (transformWithState) engines — the
-    stateful shared-kernel rule: pool the group's Arrow chunks, sort
-    once on (ts, step-rank), advance on next-step matches at-or-after
-    the current reach time. Returns (emitted rows, stage, reach_ts)."""
-    rank = {s: i for i, s in enumerate(steps)}
-    rows: list[dict[str, Any]] = []
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        pooled = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        pooled = pooled.assign(
-            _rk=pooled["event_type"].map(rank).fillna(len(steps)).astype("int64")
-        )
-        for r in pooled.sort_values(["ts", "_rk"], kind="stable").itertuples(index=False):
-            if stage >= len(steps):
-                break
-            if r.event_type == steps[stage] and (reach_ts is None or r.ts >= reach_ts):
-                stage += 1
-                reach_ts = r.ts
-                rows.append(
-                    {"user_id": user_id, "funnel_stage": stage, "reached_ts": r.ts}
-                )
-    return rows, stage, reach_ts
 
 
 def track_funnel(events: DataFrame, steps: tuple[str, ...] = ("view", "click", "purchase")) -> DataFrame:

@@ -8,30 +8,6 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# --- protobuf shim (TWS integration tests) ----------------------------------
-# No protobuf wheel is installed (and installs are forbidden), but the
-# gcloud SDK layer bundles a pure-Python protobuf 6.32; tests/_pbshim
-# bridges exactly that subpackage in (see its README for the version-gate
-# rationale). Must run BEFORE any SparkSession exists: workers inherit
-# PYTHONPATH at JVM-gateway launch, and their interpreters auto-import
-# the shim's sitecustomize to apply the same patch worker-side.
-import importlib.util  # noqa: E402
-
-_PBSHIM = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_pbshim")
-try:
-    _have_pb = importlib.util.find_spec("google.protobuf") is not None
-except ModuleNotFoundError:
-    _have_pb = False
-if not _have_pb and os.path.isdir(
-    "/usr/lib/google-cloud-sdk/platform/google_appengine/google/protobuf"
-):
-    sys.path.insert(0, _PBSHIM)
-    os.environ["PYTHONPATH"] = _PBSHIM + os.pathsep + os.environ.get("PYTHONPATH", "")
-    os.environ.setdefault("PROTOCOL_BUFFERS_PYTHON_IMPLEMENTATION", "python")
-    from google.protobuf import runtime_version as _rv  # noqa: E402
-
-    _rv.ValidateProtobufRuntimeVersion = lambda *a, **k: None
-
 from rt_bigdata_spark.config import TESTDATA_TABLES  # noqa: E402
 from rt_bigdata_spark.session import get_spark  # noqa: E402
 

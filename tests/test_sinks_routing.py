@@ -6,7 +6,7 @@ import pyspark.sql.functions as F
 
 from rt_bigdata_spark.operators.projections import parse_json, prune_to_allowlist, valid_cdc_filter
 from rt_bigdata_spark.operators.routing import apply_column_allowlist, route_by_config, split_stream
-from rt_bigdata_spark.streaming.sinks import dedup_last_wins, foreach_batch_upsert, read_upserted
+from rt_bigdata_spark.streaming.sinks import dedup_last_wins, foreach_batch_upsert, jdbc_batch_sink, read_upserted
 
 
 def test_upsert_sink_idempotent_on_replay(spark, tmp_path):
@@ -21,6 +21,19 @@ def test_upsert_sink_idempotent_on_replay(spark, tmp_path):
     final = read_upserted(spark, out_dir, keys=["id"], version_col="ts")
     rows = {r.id: (r.payload, r.ts) for r in final.collect()}
     assert rows == {1: ("a2", 200), 2: ("b", 100)}  # last-wins, no dupes
+
+
+def test_jdbc_batch_sink_dedups_each_batch_then_appends(spark):
+    """S9 ClickHouse sink against Spark's bundled in-memory Derby: each
+    micro-batch keeps its last version per key, and batches append (the
+    reference's ReplacingMergeTree merges versions on read)."""
+    url = "jdbc:derby:memory:jdbc_batch_sink;create=true"
+    props = {"driver": "org.apache.derby.iapi.jdbc.AutoloadedDriver"}
+    fn = jdbc_batch_sink(url, "stats", keys=["k"], version_col="ts", properties=props)
+    fn(spark.createDataFrame([("a", 1), ("a", 2), ("b", 1)], "k string, ts long"), 0)
+    fn(spark.createDataFrame([("a", 3)], "k string, ts long"), 1)
+    got = sorted((r.k, r.ts) for r in spark.read.jdbc(url, "stats", properties=props).collect())
+    assert got == [("a", 2), ("a", 3), ("b", 1)]
 
 
 def test_dedup_last_wins_tie_break_deterministic(spark):

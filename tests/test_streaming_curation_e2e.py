@@ -177,114 +177,3 @@ def test_streaming_curation_chain_equals_batch_pipeline(spark, vectors, tmp_path
     # (both sinks) remains a no-op
     run_trigger(2)
     assert _rows(ivf_topk_streamed(spark, ivf_state, queries, cents, k=5)) == _rows(want)
-
-
-def test_streaming_curation_chain_with_v2_dedup_arm(spark, vectors, tmp_path):
-    """r13 verdict item 6: the same planted-dup chain with the id-dedup
-    arm on the TWS-v2 engine. A REAL readStream feeds
-    ``dedup_docs_v2`` (transformWithState + RocksDB: exact id-level
-    dedup, the front gate), and each surviving micro-batch drives the
-    same two-sink chain (near-dup store → keepers → IVF index) inside
-    foreachBatch. Planted: the content-dup cliques of the v1 test
-    (copies under DIFFERENT ids — these must PASS the id gate and die
-    in the near-dup store) plus id-level redeliveries of docs 5 and 17
-    (same id — these must die at the v2 gate and never reach sink 1).
-    Final index ≡ the batch pipeline, same as the v1 chain."""
-    import json as _json
-    import time as _time
-
-    from tests.test_stateful_v2 import HAVE_PROTOBUF
-
-    if not HAVE_PROTOBUF:
-        pytest.skip("TWS worker needs the protobuf runtime (see tests/_pbshim)")
-
-    from rt_bigdata_spark.session import use_rocksdb_state
-    from rt_bigdata_spark.streaming.stateful_v2 import dedup_docs_v2
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state(spark)
-    try:
-        nd_state = str(tmp_path / "nd_state")
-        pairs_dir = str(tmp_path / "nd_pairs")
-        ivf_state = str(tmp_path / "ivf")
-        src = tmp_path / "src"
-        src.mkdir()
-
-        cents = _ivf_centroids(
-            _vecs_df(spark, vectors, list(range(N_DOCS))), "vec_id", "embedding", 8
-        )
-        nd_sink = near_dup_maintenance_sink(nd_state, pairs_dir)
-        ivf_sink = ivf_index_maintenance_sink(ivf_state, cents)
-
-        batches = {
-            0: list(range(0, 16)),
-            # cross-batch content dups of 3, in-batch content dup of 17,
-            # and an id-level redelivery of 5 (same id → v2 gate drops it)
-            1: list(range(16, 32)) + [1003, 2003, 1017, 5],
-            # later content dup of 17, clique around 29, redelivered 17
-            2: list(range(32, 48)) + [2017, 1029, 2029, 17],
-        }
-        seen_by_sinks: list[tuple[int, list[int]]] = []
-
-        def chain(batch_df, batch_id: int) -> None:
-            ids = sorted(int(r.doc_id) for r in batch_df.select("doc_id").collect())
-            seen_by_sinks.append((batch_id, ids))
-            docs = _docs_df(spark, ids)  # rebuild with planner-friendly source
-            nd_sink(docs, batch_id)
-            keepers = _keepers_of_batch(spark, pairs_dir, ids, batch_id)
-            ivf_sink(_vecs_df(spark, vectors, keepers), batch_id)
-
-        def write_batch(name: str, ids: list[int]) -> None:
-            p = src / name
-            tmp = src / (name + ".tmp")
-            with open(tmp, "w") as f:
-                for i in ids:
-                    f.write(_json.dumps({"doc_id": i, "text": _text(_base_id(i))}) + "\n")
-            tmp.rename(p)
-            _time.sleep(0.05)
-
-        stream = spark.readStream.schema("doc_id LONG, text STRING").json(str(src))
-        q = (
-            dedup_docs_v2(stream)
-            .writeStream.foreachBatch(chain)
-            .option("checkpointLocation", str(tmp_path / "chk"))
-            .outputMode("append")
-            .start()
-        )
-        try:
-            for b in sorted(batches):
-                write_batch(f"b{b}.json", batches[b])
-                q.processAllAvailable()
-        finally:
-            q.stop()
-
-        # the id-level redeliveries never reached the sinks
-        all_sunk = [i for _, ids in seen_by_sinks for i in ids]
-        assert all_sunk.count(5) == 1 and all_sunk.count(17) == 1
-        # the content dups (different ids) DID reach sink 1 — they are
-        # the near-dup store's kill, not the id gate's
-        assert 1003 in all_sunk and 2029 in all_sunk
-
-        # batch ground truth over the UNIQUE ids (content dups included)
-        uniq_ids = sorted({i for ids in batches.values() for i in ids})
-        docs = _docs_df(spark, uniq_ids)
-        pairs = minhash_lsh_pairs(docs)
-        labeled = connected_components(
-            docs.select(F.col("doc_id").alias("id")),
-            pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-        )
-        keepers_batch = sorted(
-            int(r.node) for r in labeled.filter(F.col("node") == F.col("label")).collect()
-        )
-        assert keepers_batch == list(range(N_DOCS))
-
-        queries = _vecs_df(spark, vectors, [0, 1, 2])
-        keeper_vecs = _vecs_df(spark, vectors, keepers_batch)
-        want = ivf_topk(keeper_vecs, queries, k=5, n_centroids=8, centroids=cents)
-        got = ivf_topk_streamed(spark, ivf_state, queries, cents, k=5)
-        assert _rows(got) == _rows(want)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)

@@ -6,6 +6,8 @@
   stateful (``unique_visit_app``) and window (``keyword_stats_app``)
   queries that ran under the old fixed width of 32. The upsert sinks
   must still equal the batch builders over all input.
+- T1 (``correct_is_new``) carries each mid's first-visit date from one
+  micro-batch to the next.
 - The stateful operators keep whichever column carries the watermark,
   whatever its name, so event-time timeouts still fire.
 """
@@ -20,7 +22,7 @@ import pyspark.sql.functions as F
 
 from rt_bigdata_spark import apps
 from rt_bigdata_spark.streaming.sinks import foreach_batch_upsert, read_upserted
-from rt_bigdata_spark.streaming.stateful import PAGE_EVENT_SCHEMA, detect_bounces
+from rt_bigdata_spark.streaming.stateful import PAGE_EVENT_SCHEMA, correct_is_new, detect_bounces
 
 OLD_WIDTH = "32"
 SINKS = {  # query → (sink keys, version column, compared columns)
@@ -108,6 +110,38 @@ def test_checkpoint_from_older_shuffle_width_restarts_and_matches_batch(spark, t
     for name, (keys, ver, cols) in SINKS.items():
         got = read_upserted(spark, str(tmp_path / "sink" / name), keys, ver)
         assert sorted(got.select(*cols).collect()) == sorted(want[name].select(*cols).collect()), name
+
+
+def test_is_new_correction_carries_state_across_micro_batches(spark, tmp_path):
+    """Batch 1: A's day-1 ``is_new=1`` claim stands; B is first seen as a
+    returning visitor. Batch 2: A's day-2 claim and B's same-day claim
+    are both rewritten to 0, which only the state from batch 1 allows."""
+    day2 = 86_400_000
+    src = tmp_path / "src"
+    src.mkdir()
+
+    def ev(mid, is_new, ts):
+        return json.dumps({"mid": mid, "page_id": "home", "last_page_id": None, "is_new": is_new, "ts": ts})
+
+    stream = spark.readStream.schema(PAGE_EVENT_SCHEMA).option("maxFilesPerTrigger", "1").json(str(src))
+    q = (
+        correct_is_new(stream)
+        .writeStream.format("memory")
+        .queryName("is_new_two_batches")
+        .option("checkpointLocation", str(tmp_path / "chk"))
+        .outputMode("append")
+        .start()
+    )
+    try:
+        _write(str(src), "b1.json", [ev("A", "1", 1_000), ev("B", "0", 2_000)])
+        q.processAllAvailable()
+        _write(str(src), "b2.json", [ev("A", "1", day2 + 1_000), ev("B", "1", 3_000)])
+        q.processAllAvailable()
+        assert q.lastProgress["batchId"] == 1
+        out = {(r.mid, r.ts, r.is_new) for r in spark.sql("select * from is_new_two_batches").collect()}
+        assert out == {("A", 1_000, "1"), ("B", 2_000, "0"), ("A", day2 + 1_000, "0"), ("B", 3_000, "0")}
+    finally:
+        q.stop()
 
 
 def test_bounce_timeout_fires_on_a_differently_named_watermark_column(spark, tmp_path):
