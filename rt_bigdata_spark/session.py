@@ -13,6 +13,23 @@ single session factory. Defaults:
   width that still keeps every core busy. Cluster deploys set
   ``spark.sql.shuffle.partitions`` through ``extra_conf``; a streaming
   query restarted from a checkpoint keeps the width recorded there.
+- A JIT compiler pool sized to the same width:
+  ``-XX:CICompilerCount=max(2, cpus // 2)``. HotSpot sizes its pool for
+  the whole machine (3 threads on 4 cores: 1 C1 + 2 C2), but the
+  ``local[cpus]`` task threads already run on every core, so each extra
+  C2 thread takes a core from a micro-batch or a query. Half the cores
+  leaves C2 one thread per two task threads; 2 (1 C1 + 1 C2) is the
+  minimum under tiered compilation. Measured on 4 cores only (pool
+  3 -> 2); C1-only (``-XX:TieredStopAtLevel=1``) saved more CPU but made
+  warehouse queries slower.
+- JVM options are merged, not replaced: the engine's, then the
+  factory's (``get_hive_spark``'s Derby home), then the caller's
+  ``spark.driver.extraJavaOptions`` from ``extra_conf``, joined with
+  spaces. HotSpot takes the last value of an ``-XX`` flag, so the
+  caller's flag wins. They apply only when this factory launches the
+  JVM: a ``getOrCreate`` on a running JVM, or a ``spark-submit``
+  launch, keeps the launcher's options. A cluster deploy sets
+  ``spark.executor.extraJavaOptions`` for its executors.
 - A generated-code cache that holds the engine's working set: every
   registry spec's Janino classes stay compiled across queries instead
   of being evicted and recompiled (and JIT-compiled again) each time.
@@ -102,14 +119,22 @@ def use_rocksdb_state(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_STATE_STORE)
 
 
+_JAVA_OPTS = "spark.driver.extraJavaOptions"
+
+
 def _session(app_name: str, conf: dict[str, str], extra_conf: dict[str, str] | None, hive: bool = False) -> SparkSession:
     """Build (or return) the session on ``local[cpus]`` — ``cpus`` is
     ``SPARK_GRAFT_CPUS`` if set, else the cores this process may run on —
-    with one shuffle and state partition per core, then the defaults,
-    ``conf`` and the caller's ``extra_conf`` (which may override the width)."""
+    with one shuffle and state partition per core and a JIT compiler
+    pool of half the cores, then the defaults, ``conf`` and the caller's
+    ``extra_conf`` (which may override the width). The engine's,
+    ``conf``'s and the caller's JVM options are joined, the caller's last."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    merged = {**_DEFAULTS, "spark.sql.shuffle.partitions": str(cpus), **conf, **(extra_conf or {})}
+    extra_conf = extra_conf or {}
+    merged = {**_DEFAULTS, "spark.sql.shuffle.partitions": str(cpus), **conf, **extra_conf}
+    java_opts = (f"-XX:CICompilerCount={max(2, cpus // 2)}", conf.get(_JAVA_OPTS), extra_conf.get(_JAVA_OPTS))
+    merged[_JAVA_OPTS] = " ".join(filter(None, java_opts))
     for k, v in merged.items():
         builder = builder.config(k, v)
     if hive:
@@ -144,7 +169,7 @@ def get_hive_spark(
     """
     hive_conf = {
         "spark.sql.warehouse.dir": os.path.join(warehouse_dir, "warehouse"),
-        "spark.driver.extraJavaOptions": f"-Dderby.system.home={os.path.join(warehouse_dir, 'derby')}",
+        _JAVA_OPTS: f"-Dderby.system.home={os.path.join(warehouse_dir, 'derby')}",
     }
     return _session(app_name, hive_conf, extra_conf, hive=True)
 
